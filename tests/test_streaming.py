@@ -413,3 +413,58 @@ def test_stream_mannwhitney_equals_batch(spark):
     t = stream_mannwhitney(spark, SF_SMOKE).collect()[0]
     assert (b.n_treat, b.n_ctrl, b.u2, b.u, b.auc) \
         == (t.n_treat, t.n_ctrl, t.u2, t.u, t.auc)
+
+
+def test_twin_table_integrity():
+    """Every TWINS row binds a module-level query of the same name
+    (the one the registry serves), documented, in a known output mode;
+    memory-sink names are unique across windows and stateful — a
+    shared sink would make ``spark.table(name)`` read another twin's
+    result."""
+    import ast
+    import inspect
+
+    from mapreduce_rust_spark import registry
+    from mapreduce_rust_spark.streaming import stateful, windows
+    served = registry.queries()
+    for t in windows.TWINS:
+        fn = getattr(windows, t.name)
+        assert fn.__name__ == t.name and served[t.name] is fn
+        assert (fn.__doc__ or "").strip(), t.name
+        assert t.mode in ("complete", "append"), t.name
+    assert [n for n, _, _ in windows.REGISTRATIONS] \
+        == [t.name for t in windows.TWINS]
+    stateful_sinks = [
+        c.args[1].value
+        for c in ast.walk(ast.parse(inspect.getsource(stateful)))
+        if isinstance(c, ast.Call)
+        and getattr(c.func, "id", None) == "_run_to_table"]
+    assert len(stateful_sinks) == len(stateful.REGISTRATIONS)
+    sinks = [t.sink for t in windows.TWINS] + stateful_sinks
+    assert len(set(sinks)) == len(sinks)
+
+
+def test_scratch_checkpoint_falls_back_when_shm_is_full(
+        spark, monkeypatch, tmp_path):
+    """With no explicit scratch conf, a tmpfs below the free-space
+    floor is skipped: the throwaway checkpoint lands under the normal
+    temp dir instead of failing the stream mid-run with ENOSPC. An
+    explicit scratch conf is honoured as given."""
+    import os
+    import shutil
+    import tempfile
+
+    from mapreduce_rust_spark.streaming import windows
+    assert not spark.conf.get(windows._SCRATCH_CONF, "")
+    monkeypatch.setattr(windows, "_free_bytes", lambda path: 0)
+    ckpt = windows._scratch_checkpoint_dir(spark)
+    try:
+        assert os.path.dirname(ckpt) == tempfile.gettempdir()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
+    spark.conf.set(windows._SCRATCH_CONF, str(tmp_path))
+    try:
+        ckpt = windows._scratch_checkpoint_dir(spark)
+        assert os.path.dirname(ckpt) == str(tmp_path)
+    finally:
+        spark.conf.unset(windows._SCRATCH_CONF)
