@@ -466,6 +466,12 @@ def compact_tail_line(payload: dict, timings: dict, record: str,
         compact["common_prev"] = common_prev
     compact["queries_note"] = ("slowest-first subset; "
                                "full map in full_record")
+    # an over-long summary (e.g. a deep full_record path) must not push
+    # the line past the budget either: shed the optional keys in order
+    for optional in ("queries_note", "common_prev"):
+        if len(json.dumps({**compact, "queries": {}})) <= _TAIL_BUDGET:
+            break
+        compact.pop(optional, None)
     compact["queries"] = {}
     for name, sec in sorted(timings.items(),
                             key=lambda kv: (-kv[1], kv[0])):

@@ -496,30 +496,31 @@ def tclose_closed_form(cells: DataFrame) -> DataFrame:
     earth-mover's distance between its sensitive-bucket distribution
     and the global one, on the ORDERED fixed grid — computed as
     all-integer cross-multiplied prefix sums (common denominator
-    n·N·(B−1)), so both engines order and hash identically."""
+    n·N·(B−1)), so both engines order and hash identically.
+
+    Single pass: the bucket grid is fixed (B = ``TCLOSE_B``), so one
+    per-class aggregate pivots the class's B bucket counts into
+    columns (a bucket the class lacks is a 0, not a missing row), and
+    ``over ()`` sums on that class table give the B global counts and
+    N. The prefix sums d_j = Σ_{i≤j} (c_i·N − C_i·n) and Σ_j |d_j| are
+    then B-term column expressions, with no join.
+    """
     from pyspark.sql import Window as W
-    spark = cells.sparkSession
-    glob = cells.groupBy("b").agg(F.sum("c").alias("cg"))
-    tot = cells.agg(F.sum("c").alias("n_all"))
-    classes = (cells.groupBy("o_orderpriority", "o_day")
-                    .agg(F.sum("c").alias("n")))
-    grid = (classes.crossJoin(
-                F.broadcast(spark.range(TCLOSE_B).withColumnRenamed("id", "b")))
-            .join(cells, ["o_orderpriority", "o_day", "b"], "left")
-            .join(F.broadcast(glob), "b", "left")
-            .crossJoin(F.broadcast(tot))
-            .select("o_orderpriority", "o_day", "n", "b", "n_all",
-                    F.coalesce("c", F.lit(0)).alias("c"),
-                    F.coalesce("cg", F.lit(0)).alias("cg")))
-    w = (W.partitionBy("o_orderpriority", "o_day").orderBy("b")
-          .rowsBetween(W.unboundedPreceding, W.currentRow))
-    pref = grid.withColumn(
-        "d", F.sum(F.col("c") * F.col("n_all") - F.col("cg") * F.col("n"))
-              .over(w))
-    return (pref.groupBy("o_orderpriority", "o_day")
-            .agg(F.max("n").alias("n"),
-                 F.sum(F.abs(F.col("d"))).alias("emd_num"),
-                 F.max("n_all").alias("n_all"))
+    per = cells.groupBy("o_orderpriority", "o_day").agg(
+        F.sum("c").alias("n"),
+        *(F.sum(F.when(F.col("b") == j, F.col("c")).otherwise(0))
+           .alias(f"c{j}") for j in range(TCLOSE_B)))
+    every = W.partitionBy()
+    glob = per.select(
+        "*", F.sum("n").over(every).alias("n_all"),
+        *(F.sum(f"c{j}").over(every).alias(f"g{j}")
+          for j in range(TCLOSE_B)))
+    d, emd = F.lit(0), F.lit(0)
+    for j in range(TCLOSE_B):
+        d = d + (F.col(f"c{j}") * F.col("n_all") - F.col(f"g{j}") * F.col("n"))
+        emd = emd + F.abs(d)
+    return (glob.select("o_orderpriority", "o_day", "n", "n_all",
+                        emd.cast("long").alias("emd_num"))
             .select("o_orderpriority", "o_day", "n", "emd_num",
                     F.expr(f"emd_num * 1000000 DIV "
                            f"(n * n_all * {TCLOSE_B - 1})").alias("t_ppm")))
@@ -537,7 +538,9 @@ def t_closeness_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     n·N·(B−1) = Σ_j |Σ_{i≤j} (c_i·N − C_i·n)|.
 
     Shape: one map-side-combined aggregate to (class, bucket) cells,
-    a ≤B-row global broadcast, one B-row-per-class prefix window.
+    one per-class aggregate pivoting the B buckets into columns, and
+    ``over ()`` global sums on the class table; the prefix sums are
+    column arithmetic (see ``tclose_closed_form``).
     Factored into mergeable cells + closed form for the streaming
     kappa twin (``streaming.windows.stream_t_closeness``).
 
@@ -691,8 +694,9 @@ def tukey_fences_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     2·v > 2·Q3 + 3·IQR flags high. Pure BIGINT on both engines.
 
     Scale: one map-side-combined aggregate to (priority, cents)
-    cells; the cumsum window runs over the bounded cells grid; one
-    broadcast join-back of the 5-row fence table for the final count.
+    cells, then one pass over the bounded cells grid partitioned by
+    priority: the cumsum and quartile windows and the tail-count
+    aggregate share one shuffle, with no join.
 
     Output: ``(o_orderpriority, n, q1_cents, q3_cents, n_low,
     n_high)``.
@@ -709,33 +713,40 @@ def tukey_closed_form(cells: DataFrame) -> DataFrame:
     """Fence + tail-count readout from the (priority, vc, c) cells —
     shared by the batch op and ``streaming.windows
     .stream_tukey_fences``. Everything here is dims-grid work (the
-    cells are bounded by the cents range)."""
+    cells are bounded by the cents range).
+
+    Single pass: one window partitioned by priority and ordered by vc
+    puts the running count and the priority total n on every cell; a
+    second window over the SAME partition (no new shuffle) spreads
+    the two quartiles, read off the running count, onto every cell;
+    one per-priority aggregate then counts the tails against the
+    cleared fences. The cells are read once, with no join."""
     from pyspark.sql import Window as W
-    wc = (W.partitionBy("o_orderpriority").orderBy("vc")
-           .rowsBetween(W.unboundedPreceding, W.currentRow))
-    t = cells.withColumn("cum", F.sum("c").over(wc))
-    n = cells.groupBy("o_orderpriority").agg(
-        F.sum("c").cast("long").alias("n"))
-    q = (t.join(F.broadcast(n), "o_orderpriority")
-         .groupBy("o_orderpriority")
-         .agg(F.max("n").alias("n"),
-              F.min(F.when(F.col("cum") >= F.expr("(n + 3) DIV 4"),
-                           F.col("vc"))).alias("q1_cents"),
-              F.min(F.when(F.col("cum") >= F.expr("(3 * n + 3) DIV 4"),
-                           F.col("vc"))).alias("q3_cents")))
+    wp = W.partitionBy("o_orderpriority")
+    wc = wp.orderBy("vc")
+    t = cells.select(
+        "o_orderpriority", "vc", "c",
+        F.sum("c").over(wc.rowsBetween(W.unboundedPreceding,
+                                       W.currentRow)).alias("cum"),
+        F.sum("c").over(wc.rowsBetween(W.unboundedPreceding,
+                                       W.unboundedFollowing))
+         .cast("long").alias("n"))
+    q = t.select(
+        "o_orderpriority", "vc", "c", "n",
+        F.min(F.when(F.col("cum") >= F.expr("(n + 3) DIV 4"),
+                     F.col("vc"))).over(wp).alias("q1_cents"),
+        F.min(F.when(F.col("cum") >= F.expr("(3 * n + 3) DIV 4"),
+                     F.col("vc"))).over(wp).alias("q3_cents"))
     iqr = F.col("q3_cents") - F.col("q1_cents")
-    fences = q.select(
-        "o_orderpriority", "n", "q1_cents", "q3_cents",
-        (2 * F.col("q1_cents") - 3 * iqr).alias("lo2"),
-        (2 * F.col("q3_cents") + 3 * iqr).alias("hi2"))
-    return (cells.join(F.broadcast(fences), "o_orderpriority")
-            .groupBy("o_orderpriority")
+    lo2 = 2 * F.col("q1_cents") - 3 * iqr
+    hi2 = 2 * F.col("q3_cents") + 3 * iqr
+    return (q.groupBy("o_orderpriority")
             .agg(F.max("n").alias("n"),
                  F.max("q1_cents").alias("q1_cents"),
                  F.max("q3_cents").alias("q3_cents"),
-                 F.sum(F.when(2 * F.col("vc") < F.col("lo2"), F.col("c"))
+                 F.sum(F.when(2 * F.col("vc") < lo2, F.col("c"))
                         .otherwise(F.lit(0))).cast("long").alias("n_low"),
-                 F.sum(F.when(2 * F.col("vc") > F.col("hi2"), F.col("c"))
+                 F.sum(F.when(2 * F.col("vc") > hi2, F.col("c"))
                         .otherwise(F.lit(0))).cast("long").alias("n_high")))
 
 

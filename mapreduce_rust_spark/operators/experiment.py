@@ -930,45 +930,63 @@ def kruskal_wallis_closed_form(cnt: DataFrame) -> DataFrame:
     differ. Tie correction divides by 1 − Σ(cp³−cp)/(N³−N), one
     more integer ratio.
 
+    Single pass: one window ordered by vc reads cp (range frame
+    [0, 0], the pooled count at the row's value) and p (range frame
+    [unbounded, −1], the pooled count strictly below) onto every
+    cell, then ONE per-group aggregate collects n_g, R2_g and the
+    tie term ct3_g = Σ c·(cp² − 1). The tie identity: the cells at
+    one value v sum to cp, so Σ_rows c·(cp² − 1) = cp·(cp² − 1)
+    = cp³ − cp — the pooled tie term, summed per group and then
+    across groups. N, k and ct3 are
+    ``over ()`` sums on the k-row per-group table. No join, no cross
+    join, no driver collect; the only single-partition sort is the
+    cells grid (groups × cents, bounded by the dims).
+
     int128 ceiling: 3·10⁶·R2_g² is the tall pole — fits DECIMAL(38)/
     HUGEINT while R2_g < ~5·10¹⁵ (≈ n_g·N < 3·10¹⁵, i.e. ~10⁸
     balanced events); beyond that, split R2_g into hi/lo limbs
     before squaring (documented, not needed at any test SF)."""
     from pyspark.sql import Window as W
-    pooled = cnt.groupBy("vc").agg(F.sum("c").alias("cp"))
-    pw = (pooled.withColumn("cum", F.sum("cp").over(W.orderBy("vc")))
-                .withColumn("p", F.col("cum") - F.col("cp")))
-    per_g = (cnt.join(pw.select("vc", "cp", "p"), "vc")
-             .groupBy("event_type")
-             .agg(F.sum("c").cast("long").alias("n_g"),
-                  F.sum(F.col("c") * (2 * F.col("p") + F.col("cp") + 1))
-                   .cast("decimal(38,0)").alias("r2_g")))
-    ties = pw.agg(
-        F.sum(F.expr("CAST(cp AS DECIMAL(38,0)) * cp * cp - cp"))
-         .cast("decimal(38,0)").alias("ct3"))
-    nrow = per_g.agg(F.sum("n_g").cast("decimal(38,0)").alias("n"),
-                     F.count("*").cast("long").alias("k"))
-    tg = (per_g.crossJoin(F.broadcast(nrow))
-          .select("n", "k",
+    w = W.orderBy("vc")
+    ranked = cnt.select(
+        "event_type", "c",
+        F.sum("c").over(w.rangeBetween(0, 0)).alias("cp"),
+        F.coalesce(F.sum("c").over(w.rangeBetween(W.unboundedPreceding,
+                                                   -1)),
+                   F.lit(0)).alias("p"))
+    per_g = ranked.groupBy("event_type").agg(
+        F.sum("c").cast("long").alias("n_g"),
+        F.sum(F.col("c") * (2 * F.col("p") + F.col("cp") + 1))
+         .cast("decimal(38,0)").alias("r2_g"),
+        F.sum(F.expr("c * (CAST(cp AS DECIMAL(38,0)) * cp - 1)"))
+         .cast("decimal(38,0)").alias("ct3_g"))
+    every = W.partitionBy()
+    tg = (per_g.select(
+              "n_g", "r2_g",
+              F.sum("n_g").over(every).cast("decimal(38,0)").alias("n"),
+              F.count("*").over(every).cast("long").alias("k"),
+              F.sum("ct3_g").over(every).cast("decimal(38,0)")
+               .alias("ct3"))
+          .select("n", "k", "ct3",
                   F.expr("CAST(3000000 * CAST(r2_g * r2_g "
                          "AS DECIMAL(38,0)) "
                          "DIV (n_g * n * (n + 1)) AS DECIMAL(38,0))")
                    .alias("t_g")))
-    agg = tg.groupBy("n", "k").agg(
+    agg = tg.groupBy("n", "k", "ct3").agg(
         F.sum("t_g").cast("decimal(38,0)").alias("hsum"))
     h = ("CAST(GREATEST(CAST(0 AS DECIMAL(38,0)), "
          "hsum - 3000000 * (n + 1)) AS DECIMAL(38,0))")
-    return (agg.crossJoin(F.broadcast(ties))
-            .select(F.col("n").cast("long").alias("n"),
-                    F.col("k").alias("k"),
-                    F.col("ct3").cast("long").alias("tie_c3"),
-                    F.expr(f"CAST({h} AS BIGINT)").alias("h_ppm"),
-                    # all-tied corpus: ct3 = n³−n zeroes the tie
-                    # divisor — H is undefined there, NULL both engines
-                    F.expr(f"CAST(CASE WHEN n * n * n - n - ct3 > 0 "
-                           f"THEN {h} * (n * n * n - n) "
-                           "DIV (n * n * n - n - ct3) END AS BIGINT)")
-                     .alias("h_adj_ppm")))
+    return agg.select(
+        F.col("n").cast("long").alias("n"),
+        F.col("k").alias("k"),
+        F.col("ct3").cast("long").alias("tie_c3"),
+        F.expr(f"CAST({h} AS BIGINT)").alias("h_ppm"),
+        # all-tied corpus: ct3 = n³−n zeroes the tie
+        # divisor — H is undefined there, NULL both engines
+        F.expr(f"CAST(CASE WHEN n * n * n - n - ct3 > 0 "
+               f"THEN {h} * (n * n * n - n) "
+               "DIV (n * n * n - n - ct3) END AS BIGINT)")
+         .alias("h_adj_ppm"))
 
 
 def kruskal_wallis_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -985,9 +1003,11 @@ def kruskal_wallis_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus collapses to per-(group, distinct cents
     value) counts in one partial+final aggregate (the mergeable cells
-    the streaming twin maintains), then one dims-sized cumsum, one
-    per-group reduction, and two 1-row aggregates. One shuffle of the
-    corpus, everything after runs on the grid.
+    the streaming twin maintains), then a single pass over that grid:
+    one window ordered by value (pooled tie count and count below on
+    every cell), one per-group aggregate, and a k-row readout. One
+    shuffle of the corpus, no join; everything after runs on the
+    grid.
 
     Output: ``(n, k, tie_c3, h_ppm, h_adj_ppm)``.
     """
@@ -1532,7 +1552,12 @@ def hl_closed_form(mwcnt: DataFrame) -> DataFrame:
     """Dime-grid difference distribution + nearest-rank median from
     the (vc, ct, cc) Mann–Whitney cells — shared by the batch op and
     ``streaming.windows.stream_hodges_lehmann`` (fourth consumer of
-    the MW cell state)."""
+    the MW cell state).
+
+    The weighted median reads the running weight and the total off
+    ONE window ordered by d. The arm-by-arm difference cross join is
+    the pairwise-difference distribution itself, bounded by the dime
+    grid."""
     cnt = (mwcnt
            .groupBy(F.expr(f"vc DIV {HL_COARSE}").alias("vq"))
            .agg(F.sum("ct").alias("ct"), F.sum("cc").alias("cc")))
@@ -1544,11 +1569,14 @@ def hl_closed_form(mwcnt: DataFrame) -> DataFrame:
              .groupBy((F.col("vt") - F.col("vcc")).alias("d"))
              .agg(F.sum(F.col("wt") * F.col("wc")).alias("w")))
     from pyspark.sql import Window as W
-    cum = diffs.withColumn("cw", F.sum("w").over(W.orderBy("d")))
-    n = diffs.agg(F.sum("w").alias("n")).select(
-        "n", F.expr("(n + 1) DIV 2").alias("pos"))
-    return (cum.crossJoin(F.broadcast(n))
-            .where(F.col("cw") >= F.col("pos"))
+    wd = W.orderBy("d")
+    cum = diffs.select(
+        "d",
+        F.sum("w").over(wd.rangeBetween(W.unboundedPreceding, 0))
+         .alias("cw"),
+        F.sum("w").over(wd.rangeBetween(W.unboundedPreceding,
+                                        W.unboundedFollowing)).alias("n"))
+    return (cum.where(F.col("cw") >= F.expr("(n + 1) DIV 2"))
             .agg(F.max("n").cast("long").alias("n_pairs"),
                  (F.min("d") * HL_COARSE).cast("long")
                  .alias("hl_shift_cents")))
@@ -2167,34 +2195,44 @@ def friedman_closed_form(cells: DataFrame) -> DataFrame:
     column rank sums R2_j and χ²_F = [3ΣR2_j² − 3n²k(k+1)²] /
     (nk(k+1)) clear to exact ppm integers (the classic untied
     normalization — the Jonckheere variance convention; ties only
-    make the reported value conservative)."""
-    cells = cells.localCheckpoint(eager=False)
+    make the reported value conservative).
+
+    Single pass: one window partitioned by user and ordered by value
+    puts the block size, the tied count c (range frame [0, 0]) and
+    the count below (range frame [unbounded, −1]) on every cell;
+    complete blocks are a filter on the block size. One per-daypart
+    aggregate sums the doubled ranks — each complete block holds
+    exactly one cell per daypart, so that aggregate's row count is n
+    — and ΣR2_j² and k are ``over ()`` sums on the k-row table. The
+    cells are read once; no join."""
     from pyspark.sql import Window as W
-    full_u = (cells.groupBy("user_id")
-              .agg(F.count("*").alias("ng"))
-              .where(F.col("ng") == FRIEDMAN_K)
-              .select("user_id"))
-    p = cells.join(full_u, "user_id").localCheckpoint(eager=False)
-    vg = (p.groupBy("user_id", "v")
-          .agg(F.count("*").cast("long").alias("c")))
     wv = W.partitionBy("user_id").orderBy("v")
-    vg = vg.withColumn("below", F.sum("c").over(wv) - F.col("c"))
-    r = (p.join(vg, ["user_id", "v"])
-         .select("g", (2 * F.col("below") + F.col("c") + 1)
-                 .cast("long").alias("r2")))
-    rj = r.groupBy("g").agg(F.sum("r2").cast("long").alias("r2_sum"))
-    nn = full_u.agg(F.count("*").cast("long").alias("n"))
-    st = rj.agg(F.sum(F.expr("CAST(r2_sum AS DECIMAL(38,0)) * r2_sum"))
-                 .alias("s2"),
-                F.count("*").cast("long").alias("k"))
+    r = (cells.select(
+            "g",
+            F.count("*").over(wv.rangeBetween(W.unboundedPreceding,
+                                              W.unboundedFollowing))
+             .alias("ng"),
+            F.count("*").over(wv.rangeBetween(0, 0)).alias("c"),
+            F.count("*").over(wv.rangeBetween(W.unboundedPreceding, -1))
+             .alias("below"))
+         .where(F.col("ng") == FRIEDMAN_K))
+    rj = r.groupBy("g").agg(
+        F.sum(2 * F.col("below") + F.col("c") + 1).cast("long")
+         .alias("r2_sum"),
+        F.count("*").cast("long").alias("n"))
+    every = W.partitionBy()
+    st = rj.select(
+        "g", "r2_sum", "n",
+        F.sum(F.expr("CAST(r2_sum AS DECIMAL(38,0)) * r2_sum"))
+         .over(every).alias("s2"),
+        F.count("*").over(every).cast("long").alias("k"))
     chi = ("CAST(CASE WHEN n > 0 THEN"
            " (3 * s2 - 3 * CAST(n AS DECIMAL(38,0)) * n * k"
            "  * (k + 1) * (k + 1)) * 1000000"
            " DIV (CAST(n AS DECIMAL(38,0)) * k * (k + 1))"
            " END AS BIGINT)")
-    return (rj.crossJoin(F.broadcast(nn)).crossJoin(F.broadcast(st))
-            .select("g", "r2_sum", F.col("n").alias("n_blocks"),
-                    F.expr(chi).alias("friedman_chi2_ppm")))
+    return st.select("g", "r2_sum", F.col("n").alias("n_blocks"),
+                     F.expr(chi).alias("friedman_chi2_ppm"))
 
 
 def friedman_events(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2210,10 +2248,12 @@ def friedman_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     the classic statistic cleared to exact ppm (see
     ``friedman_closed_form``). No float anywhere.
 
-    Scale: one (user, daypart) aggregate with map-side combine; the
-    ranking window is PER USER over k=4 rows — massively parallel,
-    never a global window. State in the streaming twin is the same
-    user×4 grid (the stream_two_proportion user-dims argument).
+    Scale: one (user, daypart) aggregate with map-side combine; one
+    ranking window PER USER over k=4 rows (block size, ties and
+    count below in the same pass) — massively parallel, never a
+    global window — then a 4-row per-daypart readout. State in the
+    streaming twin is the same user×4 grid (the stream_two_proportion
+    user-dims argument).
 
     Output: ``(g, r2_sum, n_blocks, friedman_chi2_ppm)``.
     """

@@ -2146,10 +2146,12 @@ def mood_median_k_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     grand median is the lower nearest-rank order statistic, the
     median_sign convention). No float anywhere.
 
-    Scale shape: one aggregate to the (type, cents) cells, one
-    dims-sized cumsum for the grand median, one broadcast of the
-    1-row median, one per-type readout. Degenerate corpora (all
-    values equal ⇒ A = 0) yield NULL terms on both engines.
+    Scale shape: one aggregate to the (type, cents) cells, then one
+    ordered window over that grid (pooled count below each value and
+    the corpus total), one per-type aggregate, and a k-row readout —
+    no join (see ``mood_k_closed_form``).
+    Degenerate corpora (all values equal ⇒ A = 0) yield NULL terms on
+    both engines.
 
     Output: ``(event_type, n_g, n_above, mood_term_ppm)``.
     """
@@ -2170,22 +2172,35 @@ def mood_k_cells(ev: DataFrame) -> DataFrame:
 
 def mood_k_closed_form(cells: DataFrame) -> DataFrame:
     """Grand median + per-type cleared χ² terms from the (type, vc, c)
-    cells — shared by batch and streaming twin."""
-    cells = cells.localCheckpoint(eager=False)
-    vals = (cells.groupBy("vc").agg(F.sum("c").alias("c"))
-            .withColumn("cum", F.sum("c").over(W.orderBy("vc"))))
-    tot = vals.agg(F.sum("c").cast("long").alias("n"))
-    med = (vals.crossJoin(F.broadcast(tot))
-           .where(F.col("cum") >= F.expr("(n + 1) DIV 2"))
-           .agg(F.min("vc").alias("median_c")))
-    per = (cells.crossJoin(F.broadcast(med))
-           .groupBy("event_type")
-           .agg(F.sum("c").cast("long").alias("n_g"),
-                F.sum(F.when(F.col("vc") > F.col("median_c"),
-                             F.col("c")).otherwise(0))
-                 .cast("long").alias("n_above")))
-    glob = per.agg(F.sum("n_g").cast("long").alias("nn"),
-                   F.sum("n_above").cast("long").alias("aa"))
+    cells — shared by batch and streaming twin.
+
+    Single pass: one window ordered by vc puts the pooled count
+    strictly below (``p``) and the corpus total N on every cell.
+    The grand median m is the least vc whose cumulative count reaches
+    pos = (N + 1) DIV 2, so vc > m exactly when p ≥ pos (every value
+    below vc is then ≤ m, and every value ≤ m already holds pos
+    rows) — so the above-median flag is a per-row comparison. One
+    per-type aggregate then counts n_g and n_above, and the global
+    N / A are ``over ()`` sums on the k-row per-type table. No join,
+    no driver collect; the only single-partition sort is the cells
+    grid (types × cents)."""
+    w = W.orderBy("vc")
+    ranked = cells.select(
+        "event_type", "c",
+        F.coalesce(F.sum("c").over(w.rangeBetween(W.unboundedPreceding,
+                                                   -1)),
+                   F.lit(0)).alias("p"),
+        F.sum("c").over(w.rangeBetween(W.unboundedPreceding,
+                                       W.unboundedFollowing)).alias("n"))
+    per = ranked.groupBy("event_type").agg(
+        F.sum("c").cast("long").alias("n_g"),
+        F.sum(F.when(F.col("p") >= F.expr("(n + 1) DIV 2"), F.col("c"))
+               .otherwise(0)).cast("long").alias("n_above"))
+    every = W.partitionBy()
+    glob = per.select(
+        "event_type", "n_g", "n_above",
+        F.sum("n_g").over(every).cast("long").alias("nn"),
+        F.sum("n_above").over(every).cast("long").alias("aa"))
     term = ("CAST(CASE WHEN aa > 0 AND aa < nn THEN"
             " (CAST(n_above AS DECIMAL(38,0)) * nn"
             "  - CAST(n_g AS DECIMAL(38,0)) * aa)"
@@ -2193,9 +2208,8 @@ def mood_k_closed_form(cells: DataFrame) -> DataFrame:
             "    - CAST(n_g AS DECIMAL(38,0)) * aa) * 1000000"
             " DIV (CAST(aa AS DECIMAL(38,0)) * (nn - aa) * n_g)"
             " END AS BIGINT)")
-    return (per.crossJoin(F.broadcast(glob))
-            .select("event_type", "n_g", "n_above",
-                    F.expr(term).alias("mood_term_ppm")))
+    return glob.select("event_type", "n_g", "n_above",
+                       F.expr(term).alias("mood_term_ppm"))
 
 
 MOOD_MEDIAN_K_ORACLE = """

@@ -908,7 +908,7 @@ TWINS = [
          monitor. Same DuckDB oracle; bit-identical (integer counts,
          one final division)."""),
     Twin("stream_t_closeness", ORDERS, tclose_cells,
-         "stream_t_closeness", "complete", tclose_closed_form, True,
+         "stream_t_closeness", "complete", tclose_closed_form, False,
          T_CLOSENESS_ORACLE,
          """Streaming twin of ``dataquality.t_closeness_orders`` —
          fifteenth kappa pair, second over the ORDERS feed: the (QI
@@ -916,8 +916,10 @@ TWINS = [
          aggregate (state = classes × B buckets — the same class-dims
          size the batch op groups to), and the shared closed form
          derives the global distribution and the integer EMD
-         batch-side. Bit-identical to the batch op (pure integer
-         cross-multiplied prefix sums); same DuckDB oracle."""),
+         batch-side in one per-class aggregate plus ``over ()`` sums;
+         it reads the sink once, so no checkpoint precedes it.
+         Bit-identical to the batch op (pure integer cross-multiplied
+         prefix sums); same DuckDB oracle."""),
     Twin("stream_median_sign_test", EVENTS, _mw_cells,
          "stream_median_sign_test", "complete", median_sign_closed_form,
          True, MEDIAN_SIGN_ORACLE,
@@ -1026,15 +1028,16 @@ TWINS = [
          run count are all batch-side closed-form work over the
          dims-sized sink. Bit-identical; same oracle."""),
     Twin("stream_tukey_fences", ORDERS, _tukey_cells,
-         "stream_tukey_fences", "complete", tukey_closed_form, True,
+         "stream_tukey_fences", "complete", tukey_closed_form, False,
          TUKEY_FENCES_ORACLE,
          """Streaming twin of ``dataquality.tukey_fences_orders`` —
          thirty-fourth kappa pair, on the ORDERS feed: the (priority,
          cents) value-count cells are one complete-mode aggregate
          (range-bounded state), and the fence + tail-count readout is
-         closed-form over the sink. Bit-identical; same oracle. The
-         closed form branches the cells (quartiles + tail counts), so
-         the MemorySink table is checkpointed first."""),
+         closed-form over the sink: one pass partitioned by priority
+         (quartile windows, then the tail-count aggregate). It reads
+         the sink once, so no checkpoint precedes it. Bit-identical;
+         same oracle."""),
     Twin("stream_srm_check", EVENTS, srm_arm_counts, "stream_srm_check",
          "complete", srm_closed_form, False, SRM_ORACLE,
          """Streaming twin of ``experiment.srm_check_events`` —
@@ -1059,16 +1062,17 @@ TWINS = [
     Twin("stream_kruskal_wallis", EVENTS,
          lambda ev: kw_value_counts(ev.select("event_type", _cents())),
          "stream_kruskal_wallis", "complete", kruskal_wallis_closed_form,
-         True, KRUSKAL_WALLIS_ORACLE,
+         False, KRUSKAL_WALLIS_ORACLE,
          """Streaming twin of ``experiment.kruskal_wallis_events`` —
          twenty-fourth kappa pair: the per-(group, distinct cents
          value) counts are ONE complete-mode aggregate (state = groups
          × cents grid, the Mann–Whitney twin's dims bound times k),
          and the shared closed form derives the doubled midranks and
-         the tie-corrected H batch-side (it fans the cells into
-         pooled/per-group/tie branches). The k-sample rank test as a
-         LIVE multi-variant monitor. Bit-identical to the batch op
-         (pure integer floor-DIV ppm); same DuckDB oracle."""),
+         the tie-corrected H batch-side in one ordered window over
+         the sink plus one per-group aggregate. It reads the sink
+         once, so no checkpoint precedes it. The k-sample rank test
+         as a LIVE multi-variant monitor. Bit-identical to the batch
+         op (pure integer floor-DIV ppm); same DuckDB oracle."""),
     Twin("stream_brown_forsythe", EVENTS, _mw_cells,
          "stream_brown_forsythe", "complete", brown_forsythe_closed_form,
          True, BROWN_FORSYTHE_ORACLE,
@@ -1208,8 +1212,10 @@ TWINS = [
          fortieth kappa pair: the (type, cents) value counts are ONE
          complete-mode mergeable aggregate (the mw_value_counts state
          shape keyed by type), and the shared closed form derives the
-         grand median and the cleared per-type terms batch-side.
-         Bit-identical (pure integer chain); same oracle."""),
+         above-median counts and the cleared per-type terms batch-side
+         in one ordered window over the sink plus one per-type
+         aggregate. Bit-identical (pure integer chain); same
+         oracle."""),
     Twin("stream_cox_stuart", EVENTS, bartels_daily_cells,
          "stream_cox_stuart", "complete", cox_stuart_closed_form, False,
          COX_STUART_ORACLE,
@@ -1240,10 +1246,10 @@ TWINS = [
          forty-fourth kappa pair: the (user, daypart) value sums are
          ONE complete-mode mergeable aggregate (user×4 state — the
          user-dims-sized class), and the shared closed form filters to
-         complete blocks and ranks within user batch-side.
-         Bit-identical (pure integer chain); same oracle. The closed
-         form branches the cells (complete-block filter + rank grid),
-         so it checkpoints internally."""),
+         complete blocks and ranks within user batch-side in one
+         per-user window over the sink plus one per-daypart
+         aggregate. Bit-identical (pure integer chain); same
+         oracle."""),
     Twin("stream_cohens_d", EVENTS, lambda ev: cohens_agg(_treat_vc(ev)),
          "stream_cohens_d", "complete", cohens_readout, False,
          COHENS_D_ORACLE,

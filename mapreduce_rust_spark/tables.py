@@ -53,6 +53,14 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     vectorized reader rejects) is re-read as long nanos via the legacy
     conf and converted with integer division — ns epochs ≈ 1.7e18
     overflow double precision, so no float math on the raw value.
+
+    Repeated loads in one session return the SAME DataFrame object
+    (memoized per ``(applicationId, sf_dir, name)``). A query that
+    loads a table twice and joins the two loads is therefore a true
+    self-join with shared attribute ids, and Spark's ambiguous
+    self-join check can reject an un-aliased ``df["col"]`` condition:
+    alias each side at the join site. Another ``sf_dir`` or another
+    session gets a different object.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")

@@ -49,6 +49,15 @@ EXPECTED_DTYPES = {
 }
 
 
+def test_load_table_returns_one_object_per_session_dir_and_name(spark):
+    """Self-join invariant: repeated loads of one table in one session
+    are the identical DataFrame; another directory is not."""
+    a = load_table(spark, SF_DIRS[1], "events")
+    assert load_table(spark, SF_DIRS[1], "events") is a
+    assert load_table(spark, SF_DIRS[0], "events") is not a
+    assert load_table(spark, SF_DIRS[1], "orders") is not a
+
+
 @pytest.mark.parametrize("sf_dir", SF_DIRS, ids=lambda d: os.path.basename(d))
 def test_load_table_dtypes_stable(spark, sf_dir):
     for name in TABLES:

@@ -796,7 +796,7 @@ def test_round10_crop_plan_shapes(spark):
     (its inputs are aggregates, never the events scan); Palma ranks
     via the scalable_rank bucket decomposition (every window keyed by
     the bucket column, no single global data window); Tukey's fence
-    join-back is a broadcast."""
+    readout has no join (one pass partitioned by priority)."""
     from mapreduce_rust_spark.operators.dataquality import (
         tukey_fences_orders)
     from mapreduce_rust_spark.operators.experiment import (
@@ -822,7 +822,7 @@ def test_round10_crop_plan_shapes(spark):
     assert "_sb" in p, "scalable_rank bucket key must drive the rank window"
 
     p = _plan(tukey_fences_orders(spark, SF_CORRECT))
-    assert "BroadcastHashJoin" in p
+    assert "Join" not in p and "CartesianProduct" not in p
 
 
 def test_round10_minhash_est_and_centroid_dist_plan_shapes(spark):
@@ -841,3 +841,55 @@ def test_round10_minhash_est_and_centroid_dist_plan_shapes(spark):
     p = _plan(label_centroid_distances(spark, SF_CORRECT))
     assert "CartesianProduct" not in p
     assert "partial_sum" in p
+
+
+# Closed forms fused into one ordered pass over their cells plus one
+# grouped aggregate: (batch op, stream twin, job cap for the batch
+# op's execution, job cap for the twin's closed form over its sink,
+# joins in the plan, ordered Window passes over the cells). Caps are
+# the measured warm counts at SF_CORRECT plus one. Hodges–Lehmann
+# keeps its arm-by-arm difference cross join (the pairwise
+# distribution itself); t-closeness pivots its fixed bucket grid
+# into columns and needs no ordered window.
+FUSED_CLOSED_FORMS = [
+    ("kruskal_wallis_events", "stream_kruskal_wallis", 4, 3, 0, 1),
+    ("mood_median_k_events", "stream_mood_median_k", 4, 3, 0, 1),
+    ("tukey_fences_orders", "stream_tukey_fences", 4, 3, 0, 1),
+    ("friedman_events", "stream_friedman", 6, 5, 0, 1),
+    ("t_closeness_orders", "stream_t_closeness", 5, 4, 0, 0),
+    ("hodges_lehmann_events", "stream_hodges_lehmann", 9, 7, 1, 1),
+]
+
+
+def _final_plan(df) -> str:
+    """The executed plan after AQE re-planning (the final plan only)."""
+    return _plan(df).split("== Initial Plan ==")[0]
+
+
+@pytest.mark.parametrize("batch,twin,batch_cap,twin_cap,joins,ordered",
+                         FUSED_CLOSED_FORMS, ids=lambda v: str(v))
+def test_fused_closed_form_jobs_and_plan(spark, batch, twin, batch_cap,
+                                         twin_cap, joins, ordered):
+    """A fused closed form runs a handful of driver-thread jobs per
+    execution, plans no cross product and no join beyond its declared
+    one, and makes one ordered Window pass over the cells — any other
+    Window node is an ``over ()`` or partition-only read."""
+    from mapreduce_rust_spark import registry
+    qs = registry.queries()
+    tracker = spark.sparkContext.statusTracker()
+
+    def exec_jobs(name):
+        df = qs[name](spark, SF_CORRECT)
+        before = set(tracker.getJobIdsForGroup(None))
+        df.toPandas()
+        return df, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+    for name, cap in ((batch, batch_cap), (twin, twin_cap)):
+        exec_jobs(name)  # warm-up: footers, codegen, sink names
+        df, n_jobs = exec_jobs(name)
+        assert n_jobs <= cap, f"{name} ran {n_jobs} jobs (cap {cap})"
+        p = _final_plan(df)
+        assert "CartesianProduct" not in p, name
+        assert p.count("Join") == joins, name
+        windows = [ln for ln in p.splitlines() if "Window [" in ln]
+        assert sum("ASC NULLS" in ln for ln in windows) == ordered, name

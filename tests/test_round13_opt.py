@@ -109,3 +109,14 @@ def test_bench_tail_line_fits_driver_truncation():
     # slowest-first: the single slowest row is always present
     slowest = max(timings, key=timings.get)
     assert slowest in parsed["queries"]
+    # an over-long summary alone (a deep full_record path) sheds the
+    # optional keys, queries_note first, and still fits the budget
+    deep = "/" + "/".join(["very_deep_output_directory"] * 60) + "/B.json"
+    line = bench.compact_tail_line(
+        payload, timings, deep,
+        {"n": 345, "prev_s": 482.194, "now_s": 318.581})
+    s = json.dumps(line)
+    assert len(s) <= bench._TAIL_BUDGET
+    parsed = json.loads(s)
+    assert parsed["full_record"] == deep and "queries_note" not in parsed
+    assert parsed["n_queries"] == 400 and parsed["metric"]
