@@ -128,6 +128,30 @@ def test_bpe_random_corpora_property(spark):
         words = {"".join(rng.choice("abc") for _ in range(rng.randint(1, 6))): rng.randint(1, 9)
                  for _ in range(12)}
         assert _train_spark(spark, words, 5) == _bpe_reference(words, 5)
+    # two-letter words up to 12 symbols: self-pairs (a,a), repeated
+    # occurrences in one word, index entries left stale by an earlier
+    # merge, and a budget the vocabulary exhausts before it is spent
+    exhausted = False
+    for _ in range(3):
+        words = {"".join(rng.choice("ab") for _ in range(rng.randint(1, 12))): rng.randint(1, 9)
+                 for _ in range(8)}
+        want = _bpe_reference(words, 40)
+        exhausted |= len(want) < 40
+        assert _train_spark(spark, words, 40) == want
+    assert exhausted
+
+
+def test_bpe_incremental_trainer_matches_reference():
+    """The trainer kernel's incremental pair index, without Spark, on
+    many small corpora over 1-4 letter alphabets."""
+    from mapreduce_rust_spark.llm.bpe import _learn_merges
+    rng = random.Random(5)
+    for _ in range(300):
+        alphabet = rng.choice(["a", "ab", "abc", "abcd"])
+        words = {"".join(rng.choice(alphabet) for _ in range(rng.randint(1, 12))): rng.randint(1, 9)
+                 for _ in range(rng.randint(0, 15))}
+        n = rng.randint(0, 30)
+        assert _learn_merges(words.items(), n) == _bpe_reference(words, n)
 
 
 # --- snapshot diff -----------------------------------------------------
@@ -285,29 +309,23 @@ def test_bpe_encode_roundtrip_identity_on_corpus(spark):
     encoder, checked corpus-wide with no reference implementation in
     the loop. Also pins the count identity n_subwords = Σ |enc(tok)|
     that ``bpe_encode_docs`` reports."""
-    from mapreduce_rust_spark.functions.text import WS_RE
+    import re
     from mapreduce_rust_spark.llm.bpe import (
-        N_MERGES, _apply_merges, _word_freqs, bpe_encode_docs, bpe_train)
+        N_MERGES, _encode, _word_freqs, bpe_encode_docs, bpe_train)
     from mapreduce_rust_spark.tables import load_table
     from tests.conftest import SF_SMOKE
 
     merges = bpe_train(_word_freqs(spark, SF_SMOKE), N_MERGES)
-    docs = load_table(spark, SF_SMOKE, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
-
-    def enc(t):
-        syms = F.filter(F.split(t, "(?!^)"), lambda x: x != "")
-        return _apply_merges(syms, merges)
-
-    per_tok = docs.select(
-        "doc_id", F.explode(toks).alias("tok")) \
-        .select("doc_id", "tok", enc(F.col("tok")).alias("subs"))
-    bad = per_tok.where(
-        F.concat_ws("", F.col("subs")) != F.col("tok")).count()
+    # the shared merge pass the encode kernel runs, applied per token
+    per_tok = [(r.doc_id, t, _encode(t, merges))
+               for r in load_table(spark, SF_SMOKE, "documents").collect()
+               for t in re.split(r"\s+", r.text) if t]
+    bad = sum("".join(subs) != tok for _, tok, subs in per_tok)
     assert bad == 0   # round-trip identity on EVERY token
 
-    n_sub = {r.doc_id: r.n for r in per_tok.groupBy("doc_id")
-             .agg(F.sum(F.size("subs")).alias("n")).collect()}
+    n_sub = Counter()
+    for d, _, subs in per_tok:
+        n_sub[d] += len(subs)
     got = {r.doc_id: r for r in bpe_encode_docs(spark, SF_SMOKE).collect()}
     for d, r in got.items():
         assert r.n_subwords == n_sub.get(d, 0)

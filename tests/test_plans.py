@@ -121,26 +121,28 @@ def test_build_vocab_rank_is_topk_bounded(spark):
     assert "Window" in plan  # rank still assigned — over ≤K rows only
 
 
+def _jobs_during(spark, fn):
+    """(fn(), number of Spark jobs fn ran on the driver thread)."""
+    tracker = spark.sparkContext.statusTracker()
+    before = set(tracker.getJobIdsForGroup(None))
+    out = fn()
+    return out, len(set(tracker.getJobIdsForGroup(None)) - before)
+
+
 def test_tf_df_constructs_without_running_jobs(spark):
     """tf_df_docs must be purely declarative: building the DataFrame
     fires zero Spark jobs (the round-1 form ran an eager .count())."""
     from mapreduce_rust_spark.llm.textanalysis import tf_df_docs
     from mapreduce_rust_spark.tables import load_table
-    tracker = spark.sparkContext.statusTracker()
-
-    def jobs_during(fn):
-        before = set(tracker.getJobIdsForGroup(None))
-        out = fn()
-        return out, len(set(tracker.getJobIdsForGroup(None)) - before)
 
     # parquet schema-inference fires a tiny footer-read job per
     # spark.read call — that's inherent to ANY read. The eager-action
     # bug is firing MORE than the underlying reads: the round-1
     # .count() made construction cost reads + a full scan.
-    _, baseline = jobs_during(lambda: (
+    _, baseline = _jobs_during(spark, lambda: (
         load_table(spark, SF_CORRECT, "documents"),
         load_table(spark, SF_CORRECT, "documents")))
-    df, built = jobs_during(lambda: tf_df_docs(spark, SF_CORRECT))
+    df, built = _jobs_during(spark, lambda: tf_df_docs(spark, SF_CORRECT))
     assert built <= baseline, \
         f"construction ran {built} jobs vs {baseline} for its bare reads"
     assert df.count() > 0  # and it still executes fine
@@ -394,6 +396,20 @@ def test_round4_new_operator_plan_shapes(spark):
     # token stream must not shuffle for the join
     plan = _plan(dsir_importance_docs(spark, SF_CORRECT))
     assert "BroadcastHashJoin" in plan
+
+
+def test_bpe_train_job_count_is_constant_in_merges(spark):
+    """Merge learning is one single-task job whatever the merge budget.
+    Measured on a local vocabulary: 2 jobs, the repartition's
+    shuffle-map job and the kernel's result job."""
+    from mapreduce_rust_spark.llm.bpe import bpe_train
+    words = spark.createDataFrame(
+        [("lower", 2), ("lowest", 1), ("newer", 4), ("newest", 6),
+         ("wide", 2), ("widest", 3)], "w string, freq long")
+    one, n_one = _jobs_during(spark, lambda: bpe_train(words, 1))
+    eight, n_eight = _jobs_during(spark, lambda: bpe_train(words, 8))
+    assert len(one) == 1 and len(eight) == 8
+    assert n_one == n_eight <= 2 + 1, (n_one, n_eight)
 
 
 def test_evaluation_plan_shapes(spark):

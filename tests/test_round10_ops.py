@@ -51,6 +51,40 @@ def test_bpe_encode_oracle_survives_vocab_exhaustion(spark, tmp_path):
     assert want == got
 
 
+def test_bpe_symbols_are_code_points_outside_the_bmp(spark, tmp_path):
+    """Characters outside the Basic Multilingual Plane are one symbol
+    each, as in DuckDB's ``string_split(w, '')``. A JVM regex split
+    works on UTF-16 and would cut 😀 into two '?' halves, taking both
+    the learned merges and the per-doc subword counts off the
+    oracle."""
+    from mapreduce_rust_spark.llm.bpe import (
+        _bpe_encode_oracle, _bpe_train_oracle, bpe_encode_docs,
+        bpe_train_merges)
+
+    docs = pd.DataFrame({
+        "doc_id": [1, 2],
+        "source": ["a", "a"],
+        "text": ["a😀 a😀 😀b a😀😀", "😀😀😀 c𝄞 𝄞"],
+    })
+    docs.to_parquet(tmp_path / "documents.parquet")
+    con = _duck_on(tmp_path, "documents")
+
+    got = [(r.step, r.left, r.right, r.merged, r.pair_count)
+           for r in bpe_train_merges(spark, str(tmp_path))
+           .orderBy("step").collect()]
+    want = [tuple(r) for r in con.execute(
+        _bpe_train_oracle() + " ORDER BY step").fetchall()]
+    assert got == want
+    assert got[0] == (1, "a", "😀", "a😀", 3)
+
+    got = {r.doc_id: (r.n_tokens, r.n_subwords, r.fertility)
+           for r in bpe_encode_docs(spark, str(tmp_path)).collect()}
+    want = {int(r["doc_id"]): (int(r["n_tokens"]), int(r["n_subwords"]),
+                               float(r["fertility"]))
+            for _, r in con.execute(_bpe_encode_oracle()).fetchdf().iterrows()}
+    assert got == want
+
+
 def test_bpe_train_oracle_emits_only_real_rounds_on_exhaustion(
         spark, tmp_path):
     """The train oracle's UNION over m1..mN must yield exactly the
