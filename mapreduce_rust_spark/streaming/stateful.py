@@ -22,7 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from mapreduce_rust_spark.streaming.windows import _run_to_table, read_events_stream
+from mapreduce_rust_spark.streaming.windows import (
+    _run_to_table, read_events_stream_rows)
 
 OUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, v double"
@@ -45,12 +46,13 @@ def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative row per user (max over per-batch emissions)."""
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
-    ev = read_events_stream(spark, sf_dir).select("user_id", "value")
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = src.select("user_id", "value")
     updated = (ev.groupBy("user_id")
                  .applyInPandasWithState(
                      _update_user_state, OUT_SCHEMA, STATE_SCHEMA,
                      "update", GroupStateTimeout.NoTimeout))
-    out = _run_to_table(updated, "stream_stateful", "update")
+    out = _run_to_table(updated, "stream_stateful", "update", rows)
     return (out.groupBy("user_id")
                .agg(F.max("n_events").alias("n_events")))
 
@@ -117,14 +119,14 @@ def stateful_session_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact epoch micros (no float state)."""
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
-    ev = (read_events_stream(spark, sf_dir)
-          .withWatermark("ts", f"{SESS_WM_DELAY_S} seconds")
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.withWatermark("ts", f"{SESS_WM_DELAY_S} seconds")
           .select("user_id", "ts", F.unix_micros("ts").alias("us")))
     sessions = (ev.groupBy("user_id")
                   .applyInPandasWithState(
                       _update_sessions, SESS_OUT_SCHEMA, SESS_STATE_SCHEMA,
                       "append", GroupStateTimeout.EventTimeTimeout))
-    return _run_to_table(sessions, "stream_session_flush", "append")
+    return _run_to_table(sessions, "stream_session_flush", "append", rows)
 
 
 STATEFUL_SESSION_ORACLE = f"""
@@ -220,17 +222,17 @@ def stream_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     counter drops into the same harness)."""
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
-    ev = (read_events_stream(spark, sf_dir)
-          .select("event_id",
-                  F.col("event_type"),
-                  F.date_format("ts", "yyyy-MM-dd").alias("day"),
-                  F.unix_micros("ts").alias("us"),
-                  F.round(F.col("value") * 100).cast("long").alias("vc")))
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.select("event_id",
+                     F.col("event_type"),
+                     F.date_format("ts", "yyyy-MM-dd").alias("day"),
+                     F.unix_micros("ts").alias("us"),
+                     F.round(F.col("value") * 100).cast("long").alias("vc")))
     scored = (ev.groupBy("event_type", "day")
                 .applyInPandasWithState(
                     _update_zscore, Z_OUT_SCHEMA, Z_STATE_SCHEMA,
                     "update", GroupStateTimeout.NoTimeout))
-    return _run_to_table(scored, "stream_zscore", "update")
+    return _run_to_table(scored, "stream_zscore", "update", rows)
 
 
 EWMA_OUT_SCHEMA = "user_id long, n_events long, ewma double"
@@ -273,14 +275,14 @@ def stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     as the batch op."""
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
-    ev = (read_events_stream(spark, sf_dir)
-          .select("user_id", F.unix_micros("ts").alias("us"), "event_id",
-                  F.bround(F.col("value") * 100).cast("long").alias("vc")))
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
+                     F.bround(F.col("value") * 100).cast("long").alias("vc")))
     updated = (ev.groupBy("user_id")
                  .applyInPandasWithState(
                      _update_ewma, EWMA_OUT_SCHEMA, EWMA_STATE_SCHEMA,
                      "update", GroupStateTimeout.NoTimeout))
-    out = _run_to_table(updated, "stream_ewma", "update")
+    out = _run_to_table(updated, "stream_ewma", "update", rows)
     last = F.max(F.struct("n_events", "ewma")).alias("m")
     return (out.groupBy("user_id").agg(last)
                .select("user_id", F.col("m.n_events").alias("n_events"),
@@ -330,14 +332,14 @@ def stream_holt_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     the batch op."""
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
-    ev = (read_events_stream(spark, sf_dir)
-          .select("user_id", F.unix_micros("ts").alias("us"), "event_id",
-                  F.bround(F.col("value") * 100).cast("long").alias("vc")))
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
+                     F.bround(F.col("value") * 100).cast("long").alias("vc")))
     updated = (ev.groupBy("user_id")
                  .applyInPandasWithState(
                      _update_holt, HOLT_OUT_SCHEMA, HOLT_STATE_SCHEMA,
                      "update", GroupStateTimeout.NoTimeout))
-    out = _run_to_table(updated, "stream_holt", "update")
+    out = _run_to_table(updated, "stream_holt", "update", rows)
     last = F.max(F.struct("n_events", "level", "trend", "forecast1")).alias("m")
     return (out.groupBy("user_id").agg(last)
                .select("user_id", F.col("m.n_events").alias("n_events"),
@@ -392,14 +394,14 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
     from pyspark.sql import Window as W
-    ev = (read_events_stream(spark, sf_dir)
-          .select("user_id", F.unix_micros("ts").alias("us"), "event_id",
-                  "event_type"))
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
+                     "event_type"))
     updated = (ev.groupBy("user_id")
                  .applyInPandasWithState(
                      _update_markov, MARKOV_OUT_SCHEMA, MARKOV_STATE_SCHEMA,
                      "update", GroupStateTimeout.NoTimeout))
-    out = _run_to_table(updated, "stream_markov", "update")
+    out = _run_to_table(updated, "stream_markov", "update", rows)
     counts = out.groupBy("from_type", "to_type").agg(
         F.sum("n").alias("n_trans"))
     w_from = W.partitionBy("from_type")
@@ -454,15 +456,15 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch op."""
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
-    ev = (read_events_stream(spark, sf_dir)
-          .select("user_id", F.unix_micros("ts").alias("us"), "event_id",
-                  "event_type"))
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
+                     "event_type"))
     updated = (ev.groupBy("user_id")
                  .applyInPandasWithState(
                      _update_attribution, ATTR_OUT_SCHEMA,
                      ATTR_STATE_SCHEMA, "update",
                      GroupStateTimeout.NoTimeout))
-    out = _run_to_table(updated, "stream_attribution", "update")
+    out = _run_to_table(updated, "stream_attribution", "update", rows)
     return (out.groupBy("touch_type")
                .agg(F.sum("n").alias("n_conversions")))
 
@@ -516,15 +518,15 @@ def stream_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     struct-max on n_events; same DuckDB oracle as the batch op."""
     from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     _ensure_self_shipping()
-    ev = (read_events_stream(spark, sf_dir)
-          .select("user_id", F.unix_micros("ts").alias("us"), "event_id",
-                  F.substring("event_type", 1, 1).alias("tc")))
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
+                     F.substring("event_type", 1, 1).alias("tc")))
     updated = (ev.groupBy("user_id")
                  .applyInPandasWithState(
                      _update_pattern, PATTERN_OUT_SCHEMA,
                      PATTERN_STATE_SCHEMA, "update",
                      GroupStateTimeout.NoTimeout))
-    out = _run_to_table(updated, "stream_event_pattern", "update")
+    out = _run_to_table(updated, "stream_event_pattern", "update", rows)
     last = F.max(F.struct("n_events", "n_funnels")).alias("m")
     return (out.groupBy("user_id").agg(last)
                .select("user_id", F.col("m.n_events").alias("n_events"),
@@ -582,14 +584,14 @@ def stream_bot_gap_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     _ensure_self_shipping()
     from mapreduce_rust_spark.operators.monitoring import (
         bot_gap_closed_form)
-    ev = (read_events_stream(spark, sf_dir)
-          .select("user_id", F.col("ts").cast("long").alias("sec"),
-                  "event_id"))
+    src, rows = read_events_stream_rows(spark, sf_dir)
+    ev = (src.select("user_id", F.col("ts").cast("long").alias("sec"),
+                     "event_id"))
     updated = (ev.groupBy("user_id")
                  .applyInPandasWithState(
                      _update_botgap, BOTGAP_OUT_SCHEMA, BOTGAP_STATE_SCHEMA,
                      "update", GroupStateTimeout.NoTimeout))
-    out = _run_to_table(updated, "stream_bot_gap", "update")
+    out = _run_to_table(updated, "stream_bot_gap", "update", rows)
     cnt = out.groupBy("user_id", "gap").agg(F.sum("n").alias("c"))
     return bot_gap_closed_form(cnt)
 

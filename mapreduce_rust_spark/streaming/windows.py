@@ -98,7 +98,8 @@ from mapreduce_rust_spark.operators.olap import (
 from mapreduce_rust_spark.operators.relational import (
     DEC_FINE, hll_oracle_sql, hll_readout, hll_rho_select)
 from mapreduce_rust_spark.operators.temporal import INTERVAL_JOIN_ORACLE
-from mapreduce_rust_spark.tables import load_table, table_path
+from mapreduce_rust_spark.tables import (
+    load_table, read_parquet_nanos_fallback, table_path)
 
 WATERMARK = "10 minutes"
 
@@ -118,17 +119,8 @@ def _probe_schema(spark: SparkSession, path: str, nanos_fallback: bool):
     key = (app_id, path)
     schema = _SRC_SCHEMA_MEMO.get(key)
     if schema is None:
-        if nanos_fallback:
-            try:
-                schema = spark.read.parquet(path).schema
-            except Exception:
-                # TIMESTAMP(NANOS) parquet: readable as long only via
-                # the legacy conf
-                spark.conf.set(
-                    "spark.sql.legacy.parquet.nanosAsLong", "true")
-                schema = spark.read.parquet(path).schema
-        else:
-            schema = spark.read.parquet(path).schema
+        schema = (read_parquet_nanos_fallback(spark, path)
+                  if nanos_fallback else spark.read.parquet(path)).schema
         _SRC_SCHEMA_MEMO[key] = schema
     return schema
 
@@ -149,9 +141,8 @@ def read_table_stream(spark: SparkSession, sf_dir: str,
     path = table_path(sf_dir, name)
     is_events = name == "events"
     src_schema = _probe_schema(spark, path, nanos_fallback=is_events)
-    # file-stream source wants a directory/glob, not a bare file —
-    # glob to the single fixture file (prod: a landing directory)
-    raw = spark.readStream.schema(src_schema).parquet(path + "*")
+    raw = spark.readStream.schema(src_schema).parquet(
+        _stream_glob(sf_dir, name))
     if is_events:
         ts_type = dict(raw.dtypes).get("ts")
         if ts_type == "bigint":
@@ -175,23 +166,67 @@ def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 # regression can be attributed to batches vs harness.
 LAST_STREAM_STATS: dict | None = None
 
-# Shuffle (= state store) partition count bound at every twin's start.
-# Round-12 measurement (OPTIMIZATION_r12.md): per-partition state-store
-# overhead — store open, delta-file write+fsync, commit, memory-sink
-# collect task — dominates the micro-batch at ANY parallelism the
-# fixture can use, so "== cores" (the round-9 choice, 32 locally) pays
-# ~1.2 s/query over 8 partitions on identical plans, and the
-# stream-stream interval join (4 state stores per partition) pays 4x
-# that (13.4 s → 3.7 s). Every stateful shape measured faster at 8
-# (complete-mode aggs ~2.1 s → 0.9 s; applyInPandasWithState twins
-# 2.5-4.4 s → 1.8-2.5 s — Python-worker reuse means task slots, not
-# partitions, bound their parallelism). At production scale the state
-# partition count must track keyspace/throughput instead — it is fixed
-# at the query's FIRST start by the checkpoint; the constant keeps the
-# local bench comparable across SPARK_GRAFT_CPUS values (the old
-# cores-coupling made the driver's low-core bench time a different
-# plan shape, not the same one slower).
-STATE_PARTITIONS = 8
+# State-store partitions. Every state partition pays a fixed open /
+# delta write / commit / memory-sink collect task per micro-batch.
+# - JVM-state drains (the TWINS rows) bind 1: that fixed cost
+#   dominates at the fixture sizes. perfbench olap_stream (5 000
+#   events, 8 → 1 partitions, 4 cpus): mix spark.tasks 39 → 25,
+#   streaming.add_batch_ms 2604 → 1513. sf0.1 on 4 cpus, warm median
+#   of 3: the 53 stateful TWINS rows sum 69.8 → 60.3 s and 47 of them
+#   run faster; stream_session_windows (+1.1 s) and the four orders
+#   twins (+0.2 to +0.7 s) run slower (plans/r16).
+# - applyInPandasWithState drains (streaming/stateful.py) need the
+#   parallelism once their rows fill several Arrow batches, so they
+#   bind one partition per batch, capped by the task slots:
+#     n = clamp(ceil(rows / spark.sql.execution.arrow.maxRecordsPerBatch),
+#               1, min(caller's spark.sql.shuffle.partitions,
+#                      sparkContext.defaultParallelism))
+#   with ``rows`` read from the events footers. Partitions beyond the
+#   slots queue as extra waves of Python-worker tasks: sf0.1 on 4 cpus
+#   with 32 shuffle partitions, the 9 twins sum 33.8 / 29.1 / 23.6 s
+#   on 10 (one per batch) / 8 / 4 partitions, each fastest on 4. So
+#   the count grows with the cores up to one per batch (sf0.1 events:
+#   4 on 4 cpus, 10 on 10 or more).
+# In production the count is fixed by the checkpoint at the query's
+# FIRST start and must track keyspace and throughput.
+
+
+def _stream_glob(sf_dir: str, name: str) -> str:
+    """The file-stream source path of fixture table ``name``: a file
+    stream wants a directory or glob, not a bare file, so glob to the
+    single fixture file (in production, a landing directory)."""
+    return table_path(sf_dir, name) + "*"
+
+
+def read_events_stream_rows(spark: SparkSession,
+                            sf_dir: str) -> tuple[DataFrame, int]:
+    """``read_events_stream`` and the number of rows it streams: the
+    parquet footers of the files its glob matches, summed by the
+    driver's JVM (metadata only: no Spark job, and no parquet reader
+    loaded into the Python driver). For ``_run_to_table``'s
+    ``rows``."""
+    sc = spark.sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    parquet = jvm.org.apache.parquet.hadoop
+    pattern = jvm.org.apache.hadoop.fs.Path(_stream_glob(sf_dir, "events"))
+    rows = 0
+    for st in pattern.getFileSystem(conf).globStatus(pattern) or []:
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromStatus(st, conf))
+        try:
+            rows += reader.getRecordCount()
+        finally:
+            reader.close()
+    return read_events_stream(spark, sf_dir), rows
+
+
+def _state_partitions(rows: int, per_batch: int, ceiling: int) -> int:
+    """One state partition per ``per_batch`` rows, clamped to
+    [1, ceiling]. ``per_batch`` <= 0 is Arrow's "no limit" (one
+    batch)."""
+    if per_batch <= 0:
+        return 1
+    return max(1, min(-(-rows // per_batch), ceiling))
 
 
 # Scratch base for the harness's THROWAWAY stream checkpoints
@@ -226,14 +261,18 @@ def _scratch_checkpoint_dir(spark: SparkSession) -> str:
     return tempfile.mkdtemp(prefix="mrs-stream-ckpt-", dir=base)
 
 
-def _run_to_table(df: DataFrame, name: str, mode: str) -> DataFrame:
+def _run_to_table(df: DataFrame, name: str, mode: str,
+                  rows: int | None = None) -> DataFrame:
     """Drain the stream into a memory sink and return the result.
 
     The state store allocates one task per shuffle partition per
     micro-batch; a vanilla session's 200 is pathological for the
-    fixture (and for any small topic). Pin a sane value for the
-    stream's lifetime, restore afterwards — streaming queries bind
-    confs at start, so this can't leak into the caller's queries.
+    fixture (and for any small topic). Bind 1 for a JVM-state drain,
+    or for an applyInPandasWithState drain of ``rows`` source rows
+    (``read_events_stream_rows``) one per Arrow batch
+    (``_state_partitions``), for the stream's lifetime, and restore
+    the caller's count afterwards — streaming queries bind confs at
+    start, so this can't leak into the caller's queries.
     """
     global LAST_STREAM_STATS
     spark = df.sparkSession
@@ -241,6 +280,10 @@ def _run_to_table(df: DataFrame, name: str, mode: str) -> DataFrame:
         if q.name == name:
             q.stop()
     old = spark.conf.get("spark.sql.shuffle.partitions")
+    n = 1 if rows is None else _state_partitions(
+        rows,
+        int(spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")),
+        min(int(old), spark.sparkContext.defaultParallelism))
     # recentProgress is a ring buffer capped by
     # spark.sql.streaming.numRecentProgressUpdates (default 100), so
     # num_batches/trigger_ms_sum would silently undercount any stream
@@ -251,8 +294,7 @@ def _run_to_table(df: DataFrame, name: str, mode: str) -> DataFrame:
         "spark.sql.streaming.numRecentProgressUpdates", "100")
     ckpt = None
     try:
-        spark.conf.set("spark.sql.shuffle.partitions",
-                       str(STATE_PARTITIONS))
+        spark.conf.set("spark.sql.shuffle.partitions", str(n))
         spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
                        str(_PROG_CAP))
         ckpt = _scratch_checkpoint_dir(spark)
@@ -273,6 +315,12 @@ def _run_to_table(df: DataFrame, name: str, mode: str) -> DataFrame:
                 # True would mean the ring buffer saturated and the
                 # two fields above are lower bounds, not totals.
                 "progress_truncated": len(prog) >= _PROG_CAP,
+                "source_rows": rows,
+                # the count that actually ran (None: no state operator)
+                "state_partitions": max(
+                    (o.numShufflePartitions
+                     for p in prog for o in p.stateOperators),
+                    default=None),
             }
         except Exception:  # noqa: BLE001 — accounting must never fail a query
             LAST_STREAM_STATS = None

@@ -29,6 +29,29 @@ def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
 
 
+_NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
+
+
+def read_parquet_nanos_fallback(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet``, retried with TIMESTAMP(NANOS) columns
+    loaded as long when schema inference rejects them. The legacy conf
+    is bound for the retry only and the caller's value — set or unset —
+    is restored: the resolved scan keeps reading nanos as long after
+    the conf is gone, so it never leaks into the caller's session."""
+    try:
+        return spark.read.parquet(path)
+    except Exception:
+        old = spark.conf.get(_NANOS_AS_LONG, None)
+        spark.conf.set(_NANOS_AS_LONG, "true")
+        try:
+            return spark.read.parquet(path)
+        finally:
+            if old is None:
+                spark.conf.unset(_NANOS_AS_LONG)
+            else:
+                spark.conf.set(_NANOS_AS_LONG, old)
+
+
 # Session-scoped memo of the fixture scan PLANS (round 13). Every
 # query build calls load_table 1-3 times; each spark.read.parquet is a
 # driver-side footer/schema probe (the events path probes twice), and
@@ -77,12 +100,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         return df
     from pyspark.sql import functions as F
     path = table_path(sf_dir, name)
-    try:
-        df = spark.read.parquet(path)
-    except Exception:
-        # Schema inference rejects TIMESTAMP(NANOS) unless loaded as long.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        df = spark.read.parquet(path)
+    df = read_parquet_nanos_fallback(spark, path)
     ts_type = dict(df.dtypes).get("ts")
     if ts_type == "bigint":  # nanos-era fixture: convert to micros
         df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))

@@ -4,7 +4,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_CORRECT, SF_SMOKE
 
 
 def _collect_set(df, cols):
@@ -468,3 +468,77 @@ def test_scratch_checkpoint_falls_back_when_shm_is_full(
         assert os.path.dirname(ckpt) == str(tmp_path)
     finally:
         spark.conf.unset(windows._SCRATCH_CONF)
+
+
+def test_state_partitions_one_per_arrow_batch():
+    """One state partition per Arrow batch of streamed rows, clamped
+    to [1, ceiling]."""
+    from mapreduce_rust_spark.streaming.windows import _state_partitions
+    assert _state_partitions(0, 10_000, 8) == 1
+    assert _state_partitions(10_000, 10_000, 8) == 1
+    assert _state_partitions(10_001, 10_000, 8) == 2
+    assert _state_partitions(10**12, 10_000, 8) == 8
+    assert _state_partitions(10**12, 0, 8) == 1  # Arrow "no limit"
+
+
+def test_twin_drains_record_derived_state_partitions(spark):
+    """A JVM-state twin drains on one state partition. An
+    applyInPandasWithState twin gets one per Arrow batch of the events
+    it streams (sf0.01: 10 000 rows, one batch by default), never more
+    than the task slots even when the caller's shuffle partitions
+    allow it. The count is read back from the stream's progress, and
+    the caller's confs are restored."""
+    from mapreduce_rust_spark.streaming import windows
+    from mapreduce_rust_spark.streaming.stateful import stateful_user_totals
+    shuffle = "spark.sql.shuffle.partitions"
+    batch = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    before = spark.conf.get(shuffle), spark.conf.get(batch)
+    slots = spark.sparkContext.defaultParallelism
+
+    def drain(fn):
+        windows.LAST_STREAM_STATS = None
+        fn(spark, SF_CORRECT)
+        stats = windows.LAST_STREAM_STATS
+        return (stats["source_rows"], stats["state_partitions"],
+                spark.conf.get(shuffle))
+
+    assert drain(windows.stream_tumbling_counts) == (None, 1, before[0])
+    assert drain(stateful_user_totals) == (10_000, 1, before[0])
+    # 1 000-row batches make 10 batches; the caller allows 32
+    spark.conf.set(shuffle, "32")
+    spark.conf.set(batch, "1000")
+    try:
+        assert drain(windows.stream_tumbling_counts) == (None, 1, "32")
+        assert drain(stateful_user_totals) == (
+            10_000, min(10, slots), "32")
+    finally:
+        spark.conf.set(shuffle, before[0])
+        spark.conf.set(batch, before[1])
+
+
+def test_nanos_era_events_leave_caller_conf_unchanged(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file is read through the legacy
+    nanosAsLong conf, which is bound for the read only: the caller's
+    (unset) value survives the batch load and a twin drain, the loaded
+    DataFrame still collects, and the twin matches its result over the
+    microsecond-era fixture."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from mapreduce_rust_spark.streaming.windows import stream_tumbling_counts
+    from mapreduce_rust_spark.tables import load_table, table_path
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(conf, None) is None
+    src = pq.read_table(table_path(SF_SMOKE, "events"))
+    i = src.schema.get_field_index("ts")
+    nanos = src.set_column(i, "ts", src.column(i).cast(pa.timestamp("ns")))
+    pq.write_table(nanos, table_path(str(tmp_path), "events"),
+                   version="2.6")
+
+    ev = load_table(spark, str(tmp_path), "events")
+    assert spark.conf.get(conf, None) is None
+    assert len(ev.collect()) == src.num_rows
+    cols = ["bucket_start", "event_type", "n", "sum_value"]
+    got = _collect_set(stream_tumbling_counts(spark, str(tmp_path)), cols)
+    assert spark.conf.get(conf, None) is None
+    assert got == _collect_set(stream_tumbling_counts(spark, SF_SMOKE), cols)
