@@ -164,8 +164,13 @@ def _train_batches(batches, n_merges: int):
     vocab = []
     for pdf in batches:
         vocab.extend(zip(pdf["w"].tolist(), pdf["freq"].tolist()))
+    yield _merges_frame(_learn_merges(vocab, n_merges))
+
+
+def _merges_frame(merges: list[tuple]) -> pd.DataFrame:
+    """Merge 5-tuples as a pandas frame with ``MERGES_SCHEMA``'s dtypes."""
     cols = ["step", "left", "right", "merged", "pair_count"]
-    yield pd.DataFrame(_learn_merges(vocab, n_merges), columns=cols) \
+    return pd.DataFrame(merges, columns=cols) \
         .astype({"step": "int32", "pair_count": "int64"})
 
 
@@ -215,9 +220,11 @@ def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table over ``documents`` (N_MERGES rows:
-    step, left, right, merged, pair_count)."""
+    step, left, right, merged, pair_count). Built from a pandas frame,
+    which the Arrow path turns into a JVM relation; a driver list would
+    be re-pickled through a Python task per default-parallelism slot."""
     merges = bpe_train(_word_freqs(spark, sf_dir), N_MERGES)
-    return spark.createDataFrame(merges, MERGES_SCHEMA)
+    return spark.createDataFrame(_merges_frame(merges), MERGES_SCHEMA)
 
 
 def _encode_batches(batches, merges: list[tuple]):

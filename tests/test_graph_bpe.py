@@ -301,6 +301,23 @@ def test_bpe_train_merges_independent_invariants(spark):
     assert merges[0].pair_count == top.pair_count
 
 
+def test_bpe_train_merges_starts_no_python_task(spark):
+    """The merge table is the same rows and schema as a driver-list
+    ``createDataFrame``, but built on the Arrow path: its JVM lineage
+    holds no ``PythonRDD``, so collecting it starts no Python task."""
+    from mapreduce_rust_spark.llm.bpe import (
+        MERGES_SCHEMA, N_MERGES, _word_freqs, bpe_train, bpe_train_merges)
+    from tests.conftest import SF_SMOKE
+
+    got = bpe_train_merges(spark, SF_SMOKE)
+    want = spark.createDataFrame(
+        bpe_train(_word_freqs(spark, SF_SMOKE), N_MERGES), MERGES_SCHEMA)
+    assert got.schema == want.schema
+    assert sorted(got.collect()) == sorted(want.collect())
+    lineage = got._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+
+
 def test_bpe_encode_roundtrip_identity_on_corpus(spark):
     """Encode→detokenize identity (VERDICT r5 item 4): applying the
     learned merges to every whitespace token of every document and
