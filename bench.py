@@ -17,6 +17,8 @@ REPO_ROOT = str(Path(__file__).resolve().parent)
 if REPO_ROOT not in sys.path:
     sys.path.insert(0, REPO_ROOT)
 
+from mapreduce_rust_spark import memo  # noqa: E402
+
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 # Headline queries: one per capability pillar (wordcount/MapReduce,
@@ -459,7 +461,7 @@ def compact_tail_line(payload: dict, timings: dict, record: str,
     plus a "queries" map filled slowest-first up to ``_TAIL_BUDGET``
     serialized bytes (see the contract comment in main)."""
     compact = {k: v for k, v in payload.items()
-               if k not in ("queries", "stream_detail")}
+               if k not in ("queries", "stream_detail", "memo_counts")}
     compact["n_queries"] = len(timings)
     compact["full_record"] = record
     if common_prev is not None:
@@ -480,6 +482,18 @@ def compact_tail_line(payload: dict, timings: dict, record: str,
             del compact["queries"][name]
             break
     return compact
+
+
+def timed_run(query, spark, sf_dir: str) -> float:
+    """Seconds to build ``query`` and fully execute it. Result memos
+    are cleared first, so every timed rep charges the derived tables
+    it reads; plan memos (scan plans, schemas) stay."""
+    memo.clear_results()
+    t0 = time.perf_counter()
+    n = query(spark, sf_dir).count()  # force full execution
+    sec = time.perf_counter() - t0
+    assert n >= 0
+    return sec
 
 
 def main() -> None:
@@ -530,17 +544,9 @@ def main() -> None:
     from mapreduce_rust_spark.streaming import windows as _sw
     for name in names:
         is_stream = name.startswith("stream")
-        runs = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            df = qs[name](spark, SF_DIR)
-            n = df.count()  # force full execution
-            runs.append(time.perf_counter() - t0)
-            assert n >= 0
+        runs = [timed_run(qs[name], spark, SF_DIR) for _ in range(reps)]
         while (min(runs) < noisy_cutoff or is_stream) and len(runs) < 3:
-            t0 = time.perf_counter()
-            assert qs[name](spark, SF_DIR).count() >= 0
-            runs.append(time.perf_counter() - t0)
+            runs.append(timed_run(qs[name], spark, SF_DIR))
         if min(runs) < noisy_cutoff or is_stream:
             # lower-middle median (robust for any rep count)
             timings[name] = round(sorted(runs)[(len(runs) - 1) // 2], 3)
@@ -572,6 +578,10 @@ def main() -> None:
         payload["stream_sum"] = round(stream_total, 3)
     if stream_detail:
         payload["stream_detail"] = stream_detail
+    # session memo hits/misses over the whole run (warm-up included)
+    payload["memo_counts"] = {f"{memo_name}.{outcome}": n for
+                              (memo_name, outcome), n
+                              in sorted(memo.COUNTS.items())}
     # Round-over-round triage needs only the BENCH artifacts: compare
     # this run to the previous ROUND-ARTIFACT record over the query
     # set common to both. BENCH_ANCHOR.json is a snapshot of

@@ -52,6 +52,7 @@ from pyspark.sql import types as T
 
 from mapreduce_rust_spark.core.runner import _ensure_self_shipping
 from mapreduce_rust_spark.functions.text import WS_RE
+from mapreduce_rust_spark.memo import session_memo
 
 N_MERGES = 8
 
@@ -174,18 +175,11 @@ def _merges_frame(merges: list[tuple]) -> pd.DataFrame:
         .astype({"step": "int32", "pair_count": "int64"})
 
 
-# Session-scoped memo of the learned merge list. BOTH registered BPE
-# queries learn the same merges from the same corpus vocabulary
-# (bpe_train_merges reports them; bpe_encode_docs applies them), so
-# the shared learned artifact is materialized once, exactly like the
-# co-purchase edge memo (`graph._EDGE_MEMO` discipline: keyed by
-# (applicationId, semanticHash of the input plan, n_merges), so a new
-# session, a different corpus, or a different merge budget misses by
-# construction; the value is a driver-side list of ≤ n_merges
-# 5-tuples, bytes not DataFrames).
-_MERGES_MEMO: dict[tuple[str, int, int], list[tuple]] = {}
-
-
+# The learned merge list is a ``result`` session memo: BOTH registered
+# BPE queries learn the same merges from the same corpus vocabulary
+# (bpe_train_merges reports them; bpe_encode_docs applies them). Keyed
+# by the input plan and n_merges; the value is a driver-side list of
+# ≤ n_merges 5-tuples.
 def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
     """Learn ``n_merges`` BPE merges from a (w, freq) vocabulary.
     Returns [(step, left, right, merged, pair_count), ...].
@@ -196,14 +190,14 @@ def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
     task runs ``_learn_merges`` over them — O(V·L) memory in that task
     for V such words of mean length L. The task yields ≤ ``n_merges``
     rows, so the driver collect is bounded by construction."""
-    spark = words.sparkSession
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _MERGES_MEMO if k[0] != app_id]:
-        del _MERGES_MEMO[k]
-    memo_key = (app_id, words.semanticHash(), n_merges)
-    cached = _MERGES_MEMO.get(memo_key)
-    if cached is not None:
-        return list(cached)
+    merges = session_memo(
+        words.sparkSession, "result",
+        ("bpe_merges", words.semanticHash(), n_merges),
+        lambda: _train(words, n_merges))
+    return list(merges)
+
+
+def _train(words: DataFrame, n_merges: int) -> list[tuple]:
     _ensure_self_shipping()
     # single-symbol words hold no pair and never change: they stay out
     # of the one task (Spark's length counts code points)
@@ -212,10 +206,8 @@ def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
                  .mapInPandas(partial(_train_batches, n_merges=n_merges),
                               MERGES_SCHEMA)
                  .collect())  # ≤ n_merges rows
-    merges = sorted((r.step, r.left, r.right, r.merged, r.pair_count)
-                    for r in rows)
-    _MERGES_MEMO[memo_key] = list(merges)
-    return merges
+    return sorted((r.step, r.left, r.right, r.merged, r.pair_count)
+                  for r in rows)
 
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import load_table
 
 N_PERM = 16      # MinHash permutations
@@ -38,11 +39,6 @@ SHINGLE_W = 3    # word-shingle width
 def _md5int60(col) -> F.Column:
     """Portable 60-bit hash (see module docstring)."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def _md5int48(col) -> F.Column:
-    """48-bit variant — headroom for affine combinations in int64."""
-    return F.conv(F.substring(F.md5(col), 1, 12), 16, 10).cast("long")
 
 
 def _shingles(toks_col) -> F.Column:
@@ -70,40 +66,15 @@ def _shingle_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _shingle_table_from_docs(load_table(spark, sf_dir, "documents"))
 
 
-# One persisted shingle index per (session, sf_dir) — the materialized
-# inverted index every dedup pass shares. Without the memo, every
-# minhash/ngram/curation call persisted a FRESH lineage copy and never
-# released it, so repeated calls (bench reps, the embedded LSH call in
-# curation_pipeline) stacked duplicate caches and churned the LRU store
-# (the round-3 curation_pipeline +38% regression). WeakKeyDictionary
-# keyed on the live session object: no id()-reuse collisions, entries
-# die with the session.
-from weakref import WeakKeyDictionary  # noqa: E402
-
-_SHINGLE_CACHE: WeakKeyDictionary = WeakKeyDictionary()
-
-# Memoized (sf_dir, df_cap) → materialized truth pair table; see
-# ngram_jaccard_pairs. Small by construction (near-dup pairs at
-# J >= 0.3 over the df-capped index), so localCheckpoint is cheap.
-_JACCARD_MEMO: WeakKeyDictionary = WeakKeyDictionary()
-
-# Round 13: the same discipline for the VERIFIED MinHash-LSH pair
-# table (small by construction — near-dup pairs at J ≥ JACCARD_T).
-# Four registered queries re-ran the full signature → banding →
-# verify pipeline per build (minhash_lsh_pairs itself,
-# curation_pipeline's embedded drop list, dedup_eval_lsh's LSH side,
-# and the neardup cluster family's edge input); one memoized
-# checkpoint per (session, sf_dir) materializes it once. Planted
-# corpora go through the *_from_docs / DataFrame-level paths and
-# never touch the memo.
-_MINHASH_MEMO: WeakKeyDictionary = WeakKeyDictionary()
-
-
+# The shingle index is a ``result`` session memo, one persisted table
+# per sf_dir: the materialized inverted index every dedup pass shares.
+# Without it every minhash/ngram/curation call persisted a FRESH
+# lineage copy and never released it, so repeated calls stacked
+# duplicate caches and churned the LRU store (the round-3
+# curation_pipeline +38% regression).
 def _persisted_shingles(spark: SparkSession, sf_dir: str) -> DataFrame:
-    per_session = _SHINGLE_CACHE.setdefault(spark, {})
-    if sf_dir not in per_session:
-        per_session[sf_dir] = _shingle_table(spark, sf_dir).persist()
-    return per_session[sf_dir]
+    return session_memo(spark, "result", ("shingles", sf_dir),
+                        lambda: _shingle_table(spark, sf_dir).persist())
 
 
 # --- exact dedup ----------------------------------------------------------
@@ -140,19 +111,22 @@ def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     both verify probes); it is persisted ONCE per (session, sf_dir)
     via ``_persisted_shingles`` and shared across every dedup operator
     — at scale this is the materialized inverted index every dedup
-    pass shares. Spark evicts it LRU when memory is needed. The
-    verified pair RESULT is memoized per (session, sf_dir) — see
-    ``_MINHASH_MEMO``."""
-    per_session = _MINHASH_MEMO.setdefault(spark, {})
-    if sf_dir not in per_session:
+    pass shares. Spark evicts it LRU when memory is needed.
+
+    The verified pair table is a ``result`` session memo per sf_dir
+    (small by construction: near-dup pairs at J ≥ ``JACCARD_T``):
+    four registered queries read it (this one, curation_pipeline's
+    drop list, dedup_eval_lsh's LSH side and the neardup cluster
+    family's edge input). Planted corpora go through the
+    DataFrame-level paths and never touch the memo."""
+    def build() -> DataFrame:
         sh = _persisted_shingles(spark, sf_dir)
         _, cand = _minhash_sig_candidates(sh)
         # exact-Jaccard verification restricted to CANDIDATES (never
         # the full shingle self-join — hot shingles make that
         # quadratic)
-        per_session[sf_dir] = _verify_pairs(sh, cand) \
-            .localCheckpoint(eager=True)
-    return per_session[sf_dir]
+        return _verify_pairs(sh, cand).localCheckpoint(eager=True)
+    return session_memo(spark, "result", ("minhash_pairs", sf_dir), build)
 
 
 def _minhash_sig_candidates(sh: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -293,20 +267,17 @@ def ngram_jaccard_pairs(spark: SparkSession, sf_dir: str,
     exhaustive form, kept as ground truth for the LSH recall tests —
     never use it on a corpus with unbounded hot shingles.
 
-    The RESULT pair table is memoized per (session, sf_dir, cap) —
-    the labelprop-label memo discipline for derived tables ≥2
-    consumers share: this query is registered on its own AND is the
+    The pair table is a ``result`` session memo per (sf_dir, cap),
+    small by construction (near-dup pairs at J >= 0.3 over the
+    df-capped index): this query is registered on its own AND is the
     truth side ``dedup_eval_lsh`` re-ran per call (the r8 bench
-    regression, VERDICT r8 item 4). Entries die with the session
-    (WeakKeyDictionary); a planted corpus goes through
+    regression, VERDICT r8 item 4). A planted corpus goes through
     ``jaccard_pairs_from_docs`` and never touches the memo."""
-    per_session = _JACCARD_MEMO.setdefault(spark, {})
-    key = (sf_dir, df_cap)
-    if key not in per_session:
-        per_session[key] = _jaccard_from_shingles(
+    return session_memo(
+        spark, "result", ("jaccard_pairs", sf_dir, df_cap),
+        lambda: _jaccard_from_shingles(
             _persisted_shingles(spark, sf_dir),
-            df_cap).localCheckpoint(eager=True)
-    return per_session[key]
+            df_cap).localCheckpoint(eager=True))
 
 
 def jaccard_pairs_from_docs(docs: DataFrame,

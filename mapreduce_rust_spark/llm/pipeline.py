@@ -9,6 +9,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.llm.dedup import minhash_lsh_pairs
+from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import load_table
 
 
@@ -211,18 +212,12 @@ def connected_components(edges_df: DataFrame,
         f"connected_components did not converge in {max_iters} iterations")
 
 
-# Session-scoped memo of the near-dup cluster label table (round 13,
-# the graph._EDGE_MEMO discipline): THREE registered queries
-# (neardup_clusters, neardup_keep_best, leakage_safe_split_docs)
-# derive from the same (doc_id, rep) labels, each re-running the
-# connected-components doubling loop (~1.5 s at sf0.1) per build —
-# the production answer is to materialize the shared clustering once.
-# Keyed by (applicationId, semanticHash of the PAIRS plan): a new
-# session, another corpus directory, or planted test edges miss by
-# construction, and the checkpoint blocks die with the app.
-_CC_LABELS_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
+# The near-dup cluster label table is a ``result`` session memo: THREE
+# registered queries (neardup_clusters, neardup_keep_best,
+# leakage_safe_split_docs) derive from the same (doc_id, rep) labels,
+# each re-running the connected-components doubling loop (~1.5 s at
+# sf0.1) per build. Keyed by the PAIRS plan, so planted test edges
+# miss. One row per clustered doc.
 def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the verified near-dup pairs: each doc
     gets the min doc_id of its cluster as representative. Oracled
@@ -230,19 +225,13 @@ def neardup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``NEARDUP_CLUSTERS_ORACLE``); pytest additionally checks against
     a union-find, including a planted 12-doc chain whose diameter
     exceeds the old fixed iteration count. Labels are memoized per
-    (session, pairs plan) — see ``_CC_LABELS_MEMO``."""
-    from mapreduce_rust_spark.operators.graph import evict_stale_memo
+    (session, pairs plan)."""
     pairs = minhash_lsh_pairs(spark, sf_dir).select("doc_a", "doc_b")
-    app_id = spark.sparkContext.applicationId
-    evict_stale_memo(_CC_LABELS_MEMO, app_id)
-    key = (app_id, pairs.semanticHash())
-    df = _CC_LABELS_MEMO.get(key)
-    if df is None:
-        df = (connected_components(pairs)
-              .select(F.col("node").alias("doc_id"), "rep")
-              .localCheckpoint(eager=True))
-        _CC_LABELS_MEMO[key] = df
-    return df
+    return session_memo(
+        spark, "result", ("cc_labels", pairs.semanticHash()),
+        lambda: (connected_components(pairs)
+                 .select(F.col("node").alias("doc_id"), "rep")
+                 .localCheckpoint(eager=True)))
 
 
 def neardup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,6 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import load_table
 
 
@@ -79,43 +80,16 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
                 .distinct())
 
 
-# Session-scoped memo of the materialized co-purchase edge list. Nine
-# graph queries derive from the SAME edge table; in any multi-query
-# session (the driver's oracle sweep, bench, a real analytics session)
-# rebuilding it per query re-pays two lineitem shuffles each time —
-# the production answer is to materialize the shared dataset once,
-# exactly like a cached dimension. Keyed by (applicationId,
-# semanticHash of the input plan): a new session or a DIFFERENT input
-# (planted test DataFrames, another sf_dir) misses by construction,
-# and localCheckpoint blocks die with the session, so stale reuse is
-# impossible. ~20 MB at sf0.1 (distinct (u,v) longs); bounded by the
-# distinct co-purchase pair count, not lineitem.
-_EDGE_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
-def evict_stale_memo(memo: dict[tuple[str, int], DataFrame],
-                     app_id: str) -> None:
-    """Drop (and unpersist) memo entries from other applications.
-    Without eviction each distinct input plan pins a localCheckpoint'd
-    DataFrame's storage blocks for the life of the driver process —
-    a leak in long sessions that cross a Spark-app restart."""
-    for k in [k for k in memo if k[0] != app_id]:
-        df = memo.pop(k)
-        try:
-            df.unpersist()
-        except Exception:  # noqa: BLE001 — blocks already gone with the old app
-            pass
-
-
+# The materialized co-purchase edge list is a ``result`` session memo:
+# nine graph queries derive from the SAME edge table, and rebuilding it
+# per query re-pays two lineitem shuffles each time. Keyed by the input
+# plan, so planted test DataFrames and other sf_dirs miss. ~20 MB at
+# sf0.1 (distinct (u,v) longs); bounded by the distinct co-purchase
+# pair count, not lineitem.
 def copurchase_edges_cached(li: DataFrame) -> DataFrame:
-    app_id = li.sparkSession.sparkContext.applicationId
-    evict_stale_memo(_EDGE_MEMO, app_id)
-    key = (app_id, li.semanticHash())
-    df = _EDGE_MEMO.get(key)
-    if df is None:
-        df = copurchase_edges(li).localCheckpoint(eager=True)
-        _EDGE_MEMO[key] = df
-    return df
+    return session_memo(
+        li.sparkSession, "result", ("copurchase_edges", li.semanticHash()),
+        lambda: copurchase_edges(li).localCheckpoint(eager=True))
 
 
 def _bidir_adjacency(edges: DataFrame) -> DataFrame:
@@ -541,27 +515,24 @@ def labelprop_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             .select(F.col("lbl").alias("component_min"), "n_nodes"))
 
 
-# Session-scoped memo of the MATERIALIZED (node, label) table — the
-# copurchase_edges_cached discipline one level up: labelprop_components
-# and component_stats_parts both need the same k-round propagation, so
-# in any multi-query session the second caller pays one memo lookup
-# instead of re-running three join+min-agg rounds. Bounded by the node
-# count; localCheckpoint blocks die with the session.
-_LABEL_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
+# The materialized (node, label) table is a ``result`` session memo:
+# labelprop_components and component_stats_parts both need the same
+# k-round propagation, so the second caller skips three join+min-agg
+# rounds. Bounded by the node count.
 def _labelprop_labels_cached(li: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(edges, labels) after ``LABELPROP_ROUNDS`` of shared k-round
-    min-label propagation, labels materialized and memoized per
-    (application, input plan). The transient closed-neighborhood
-    table is persisted only for the duration of the propagation."""
-    app_id = li.sparkSession.sparkContext.applicationId
-    evict_stale_memo(_LABEL_MEMO, app_id)
-    key = (app_id, li.semanticHash())
+    min-label propagation, labels materialized and memoized per input
+    plan."""
     edges = copurchase_edges_cached(li)
-    hit = _LABEL_MEMO.get(key)
-    if hit is not None:
-        return edges, hit
+    return edges, session_memo(
+        li.sparkSession, "result", ("labelprop_labels", li.semanticHash()),
+        lambda: _labelprop_labels(edges))
+
+
+def _labelprop_labels(edges: DataFrame) -> DataFrame:
+    """Materialized labels of ``edges``; the transient
+    closed-neighborhood table is persisted only for the duration of
+    the propagation."""
     adj = (edges.select(F.explode(F.array(
                 F.struct(F.col("u").alias("node"), F.col("v").alias("nbr")),
                 F.struct(F.col("v").alias("node"), F.col("u").alias("nbr"))))
@@ -579,8 +550,7 @@ def _labelprop_labels_cached(li: DataFrame) -> tuple[DataFrame, DataFrame]:
                   .groupBy("node").agg(F.min("lbl").alias("lbl")))
     labels = labels.localCheckpoint(eager=True)
     closed.unpersist()
-    _LABEL_MEMO[key] = labels
-    return edges, labels
+    return labels
 
 
 def _labelprop_cte_prefix() -> tuple[str, str]:
@@ -1266,33 +1236,21 @@ def _triangle_corners(edges: DataFrame, n_edges: int) -> DataFrame:
             .select("s", "a", "b"))
 
 
-# Session memo for the per-triangle (s, a, b) table — the
-# labelprop-label memo pattern (VERDICT r8 item 3): three registered
-# queries (triangle_count_copurchase, clustering_coeff_parts,
-# edge_support_hist_parts) each need the triangle set of the SAME
-# memoized co-purchase edge list, and rebuilding the orientation +
-# intersect machinery per query re-pays its shuffles every time.
-# Keyed by (applicationId, semanticHash of the EDGE plan): planted
-# test graphs and other sf_dirs miss by construction; localCheckpoint
-# blocks die with the session. Size: 3 longs per triangle — bounded
-# by the capped-basket triangle count, not lineitem.
-_TRI_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
+# The per-triangle (s, a, b) table is a ``result`` session memo: three
+# registered queries (triangle_count_copurchase, clustering_coeff_parts,
+# edge_support_hist_parts) and the k-truss peel each need the triangle
+# set of the SAME memoized co-purchase edge list, and rebuilding the
+# orientation + intersect machinery per query re-pays its shuffles.
+# Keyed by the EDGE plan, so planted test graphs miss. Size: 3 longs
+# per triangle — bounded by the capped-basket triangle count.
 def triangle_table_cached(edges: DataFrame, n_edges: int) -> DataFrame:
     """Materialized (s, a, b) triangle table of the given distinct
-    (u < v) edge list, built once per (application, edge plan) and
-    shared by every triangle consumer. The standalone
-    :func:`triangle_count` / :func:`triangle_corners` remain the
-    un-memoized forms for arbitrary graphs."""
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_memo(_TRI_MEMO, app_id)
-    key = (app_id, edges.semanticHash())
-    df = _TRI_MEMO.get(key)
-    if df is None:
-        df = _triangle_corners(edges, n_edges).localCheckpoint(eager=True)
-        _TRI_MEMO[key] = df
-    return df
+    (u < v) edge list, built once per (application, edge plan). The
+    standalone :func:`triangle_count` / :func:`triangle_corners`
+    remain the un-memoized forms for arbitrary graphs."""
+    return session_memo(
+        edges.sparkSession, "result", ("triangles", edges.semanticHash()),
+        lambda: _triangle_corners(edges, n_edges).localCheckpoint(eager=True))
 
 
 def edge_support_hist_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1407,48 +1365,43 @@ def ktruss_edges_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     li = load_table(spark, sf_dir, "lineitem")
     edges = copurchase_edges_cached(li)
-    return ktruss_peel(edges, use_memo=True)
+    return ktruss_peel(edges)
 
 
-# Per-edge support table memo: (u, v, support) over the full edge
-# list — the round-1 scored table the histogram readout AND the
-# k-truss peel both start from (same keying discipline as _TRI_MEMO).
-_SUPPORT_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
+# The (u, v, support) table over the full edge list is a ``result``
+# session memo: the round-1 scored table the histogram readout AND the
+# k-truss peel both start from. One row per edge.
 def edge_support_table_cached(edges: DataFrame, n_edges: int) -> DataFrame:
     """Materialized (u, v, support) for every edge of the given
     distinct (u < v) edge list (zero-support edges included), built
     from the session triangle table once per (application, edge
     plan). Shared by ``edge_support_hist_parts`` (histogram readout)
-    and ``ktruss_edges_parts`` (round-1 scores)."""
-    app_id = edges.sparkSession.sparkContext.applicationId
-    evict_stale_memo(_SUPPORT_MEMO, app_id)
-    key = (app_id, edges.semanticHash())
-    df = _SUPPORT_MEMO.get(key)
-    if df is None:
-        tri = triangle_table_cached(edges, n_edges)
-        epairs = tri.select(F.explode(F.array(
-            F.struct(F.least("s", "a").alias("u"),
-                     F.greatest("s", "a").alias("v")),
-            F.struct(F.least("s", "b").alias("u"),
-                     F.greatest("s", "b").alias("v")),
-            F.struct(F.col("a").alias("u"), F.col("b").alias("v"))))
-            .alias("e")).select("e.u", "e.v")
-        sup = epairs.groupBy("u", "v").agg(F.count("*").alias("supp"))
-        df = (edges.join(sup, ["u", "v"], "left")
-              .select("u", "v",
-                      F.coalesce("supp", F.lit(0)).cast("long")
-                       .alias("support"))
-              .localCheckpoint(eager=True))
-        _SUPPORT_MEMO[key] = df
-    return df
+    and ``ktruss_peel`` (round-1 scores)."""
+    return session_memo(
+        edges.sparkSession, "result", ("edge_support", edges.semanticHash()),
+        lambda: _edge_support(edges, triangle_table_cached(edges, n_edges)))
 
 
-def ktruss_peel(edges: DataFrame, use_memo: bool = False) -> DataFrame:
+def _edge_support(edges: DataFrame, tri: DataFrame) -> DataFrame:
+    epairs = tri.select(F.explode(F.array(
+        F.struct(F.least("s", "a").alias("u"),
+                 F.greatest("s", "a").alias("v")),
+        F.struct(F.least("s", "b").alias("u"),
+                 F.greatest("s", "b").alias("v")),
+        F.struct(F.col("a").alias("u"), F.col("b").alias("v"))))
+        .alias("e")).select("e.u", "e.v")
+    sup = epairs.groupBy("u", "v").agg(F.count("*").alias("supp"))
+    return (edges.join(sup, ["u", "v"], "left")
+            .select("u", "v",
+                    F.coalesce("supp", F.lit(0)).cast("long")
+                     .alias("support"))
+            .localCheckpoint(eager=True))
+
+
+def ktruss_peel(edges: DataFrame) -> DataFrame:
     """The peel loop of :func:`ktruss_edges_parts` over an arbitrary
-    distinct (u < v) edge list (planted tests call this directly;
-    ``use_memo`` routes round 1 through the session triangle memo).
+    distinct (u < v) edge list; round 1 reads the session triangle and
+    support memos of ``edges``.
 
     Delta peeling: a triangle of the round-r survivor set is exactly
     a round-(r−1) triangle none of whose three edges was dropped, so
@@ -1473,27 +1426,8 @@ def ktruss_peel(edges: DataFrame, use_memo: bool = False) -> DataFrame:
     out, tri = None, None
     for rnd in range(KTRUSS_ROUNDS):
         if rnd == 0:
-            if use_memo:
-                tri = triangle_table_cached(edges, n_prev)
-                scored = edge_support_table_cached(edges, n_prev)
-            else:
-                tri = (_triangle_corners(edges, n_prev)
-                       .localCheckpoint(eager=False))
-                epairs = tri.select(F.explode(F.array(
-                    F.struct(F.least("s", "a").alias("u"),
-                             F.greatest("s", "a").alias("v")),
-                    F.struct(F.least("s", "b").alias("u"),
-                             F.greatest("s", "b").alias("v")),
-                    F.struct(F.col("a").alias("u"),
-                             F.col("b").alias("v"))))
-                    .alias("e")).select("e.u", "e.v")
-                sup = (epairs.groupBy("u", "v")
-                       .agg(F.count("*").alias("supp")))
-                scored = (edges.join(sup, ["u", "v"], "left")
-                          .select("u", "v",
-                                  F.coalesce("supp", F.lit(0))
-                                   .cast("long").alias("support"))
-                          .localCheckpoint(eager=False))
+            tri = triangle_table_cached(edges, n_prev)
+            scored = edge_support_table_cached(edges, n_prev)
         else:
             # ONE scan of the carried triangle table: three broadcast
             # left joins mark which edge slots were dropped; the

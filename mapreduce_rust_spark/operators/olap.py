@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.operators import graph
+from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import load_table
 
 
@@ -1587,26 +1587,15 @@ RECO_K = 10
 RECO_EVAL_MOD = 10   # deterministic 10% customer evaluation sample
 
 
-# Session-scoped memo of the item-CF neighbor MODEL table — the
-# edge-memo justification (operators/graph.py): the CF table is a
+# The item-CF neighbor MODEL table is a ``result`` session memo: a
 # derived shared dataset (parts × top-5 rows, ~100 KB) that both the
-# registered item_cf_neighbors query and every evaluation consuming
-# the model would materialize once in a real session. Keyed by
-# (applicationId, lineitem plan hash); checkpoint blocks die with the
-# session.
-_ITEM_CF_MEMO: dict[tuple[str, int], DataFrame] = {}
-
-
+# registered item_cf_neighbors query and every evaluation consuming the
+# model would materialize once in a real session.
 def item_cf_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    app_id = spark.sparkContext.applicationId
-    graph.evict_stale_memo(_ITEM_CF_MEMO, app_id)
-    key = (app_id, li.semanticHash())
-    df = _ITEM_CF_MEMO.get(key)
-    if df is None:
-        df = item_cf_neighbors(spark, sf_dir).localCheckpoint(eager=True)
-        _ITEM_CF_MEMO[key] = df
-    return df
+    return session_memo(
+        spark, "result", ("item_cf", li.semanticHash()),
+        lambda: item_cf_neighbors(spark, sf_dir).localCheckpoint(eager=True))
 
 
 def recsys_eval_hitrate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2227,26 +2216,16 @@ def abc_xyz_matrix_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
                  F.sum("total_qty").cast("long").alias("total_qty")))
 
 
-# Session memo of the part-grain ABC / XYZ class tables consumed by
-# the matrix composition (the _ITEM_CF_MEMO justification verbatim:
-# derived shared datasets, corpus/1000-sized, keyed by
-# (applicationId, lineitem plan hash, which)).
-_ABC_XYZ_MEMO: dict[tuple[str, int, str], DataFrame] = {}
-
-
+# The part-grain ABC / XYZ class tables the matrix composition reads
+# are ``result`` session memos, shared for the item-CF reason:
+# derived datasets of corpus/1000 size.
 def _abc_xyz_cached(spark: SparkSession, sf_dir: str,
                     which: str) -> DataFrame:
     li = load_table(spark, sf_dir, "lineitem")
-    app_id = spark.sparkContext.applicationId
-    graph.evict_stale_memo(_ABC_XYZ_MEMO, app_id)
-    key = (app_id, li.semanticHash(), which)
-    df = _ABC_XYZ_MEMO.get(key)
-    if df is None:
-        base = (abc_pareto_parts if which == "abc"
-                else xyz_variability_parts)(spark, sf_dir)
-        df = base.localCheckpoint(eager=True)
-        _ABC_XYZ_MEMO[key] = df
-    return df
+    base = abc_pareto_parts if which == "abc" else xyz_variability_parts
+    return session_memo(
+        spark, "result", ("abc_xyz", li.semanticHash(), which),
+        lambda: base(spark, sf_dir).localCheckpoint(eager=True))
 
 
 def _abc_xyz_oracle() -> str:

@@ -57,6 +57,7 @@ from mapreduce_rust_spark.llm.sharding import (
     SHUFFLE_QUALITY_ORACLE, shard_quality_cells, shard_quality_closed_form)
 from mapreduce_rust_spark.llm.textanalysis import (
     LEN_QUANTILES_ORACLE, len_cells, len_quantiles_closed_form)
+from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.operators.analytic import (
     GRID_MEDIAN_ORACLE, grid_median_cells, grid_median_readout)
 from mapreduce_rust_spark.operators.dataquality import (
@@ -103,26 +104,15 @@ from mapreduce_rust_spark.tables import (
 
 WATERMARK = "10 minutes"
 
-# Session-scoped memo of stream-source schema probes (round 13, the
-# tables._TABLE_MEMO discipline): every twin build batch-reads the
-# fixture footer just to get an explicit schema for readStream —
-# across 62 twins × reps that driver-side probe is pure fixed cost.
-# Schemas only (no DataFrames, no rows); keyed by (applicationId,
-# path); other-app entries evicted.
-_SRC_SCHEMA_MEMO: dict[tuple[str, str], object] = {}
-
-
+# Stream-source schema probes are a ``plan`` session memo: every twin
+# build batch-reads the fixture footer just to get an explicit schema
+# for readStream, and across 62 twins × reps that driver-side probe is
+# pure fixed cost. Schemas only, one per source path.
 def _probe_schema(spark: SparkSession, path: str, nanos_fallback: bool):
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _SRC_SCHEMA_MEMO if k[0] != app_id]:
-        del _SRC_SCHEMA_MEMO[k]
-    key = (app_id, path)
-    schema = _SRC_SCHEMA_MEMO.get(key)
-    if schema is None:
-        schema = (read_parquet_nanos_fallback(spark, path)
-                  if nanos_fallback else spark.read.parquet(path)).schema
-        _SRC_SCHEMA_MEMO[key] = schema
-    return schema
+    return session_memo(
+        spark, "plan", ("stream_schema", path),
+        lambda: (read_parquet_nanos_fallback(spark, path) if nanos_fallback
+                 else spark.read.parquet(path)).schema)
 
 
 def read_table_stream(spark: SparkSession, sf_dir: str,

@@ -13,6 +13,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from mapreduce_rust_spark.memo import session_memo
+
 TABLES = (
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
@@ -52,21 +54,6 @@ def read_parquet_nanos_fallback(spark: SparkSession, path: str) -> DataFrame:
                 spark.conf.set(_NANOS_AS_LONG, old)
 
 
-# Session-scoped memo of the fixture scan PLANS (round 13). Every
-# query build calls load_table 1-3 times; each spark.read.parquet is a
-# driver-side footer/schema probe (the events path probes twice), and
-# across a 347-query × ≥2-rep bench session that fixed cost dominates
-# the sub-second tail (guide §1.2/§6: per-query planning floor).
-# Memoizing the DataFrame reuses the resolved scan PLAN — every
-# action still reads the parquet files; no rows are cached (verdict
-# r12 item 9 explicitly classes fixture-DataFrame reuse inside the
-# timed build as legitimate, unlike result caching). Keyed by
-# (applicationId, sf_dir, name) — a new session or another directory
-# misses by construction; other-app entries are evicted to keep the
-# dict from pinning dead sessions.
-_TABLE_MEMO: dict[tuple[str, str, str], DataFrame] = {}
-
-
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one fixture table (pushdown/pruning capable).
 
@@ -78,26 +65,25 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     overflow double precision, so no float math on the raw value.
 
     Repeated loads in one session return the SAME DataFrame object
-    (memoized per ``(applicationId, sf_dir, name)``). A query that
-    loads a table twice and joins the two loads is therefore a true
-    self-join with shared attribute ids, and Spark's ambiguous
-    self-join check can reject an un-aliased ``df["col"]`` condition:
-    alias each side at the join site. Another ``sf_dir`` or another
-    session gets a different object.
+    (a ``plan`` session memo keyed by ``("table", sf_dir, name)``).
+    Every query build calls this 1-3 times, and each fresh
+    ``spark.read.parquet`` is a driver-side footer probe; the memo
+    reuses the resolved scan plan, while every action still reads the
+    files. A query that loads a table twice and joins the two loads is
+    therefore a true self-join with shared attribute ids, and Spark's
+    ambiguous self-join check can reject an un-aliased ``df["col"]``
+    condition: alias each side at the join site. Another ``sf_dir`` or
+    another session gets a different object.
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    app_id = spark.sparkContext.applicationId
-    for k in [k for k in _TABLE_MEMO if k[0] != app_id]:
-        del _TABLE_MEMO[k]
-    key = (app_id, sf_dir, name)
-    df = _TABLE_MEMO.get(key)
-    if df is not None:
-        return df
+    return session_memo(spark, "plan", ("table", sf_dir, name),
+                        lambda: _scan_table(spark, sf_dir, name))
+
+
+def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     if name != "events":
-        df = spark.read.parquet(table_path(sf_dir, name))
-        _TABLE_MEMO[key] = df
-        return df
+        return spark.read.parquet(table_path(sf_dir, name))
     from pyspark.sql import functions as F
     path = table_path(sf_dir, name)
     df = read_parquet_nanos_fallback(spark, path)
@@ -109,7 +95,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         # instant; normalize NTZ to the session-local TIMESTAMP type so
         # window/interval arithmetic behaves identically across eras.
         df = df.withColumn("ts", F.col("ts").cast("timestamp"))
-    _TABLE_MEMO[key] = df
     return df
 
 

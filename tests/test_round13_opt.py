@@ -71,15 +71,17 @@ def test_zero_norm_rows_rank_first_like_spark_window():
 
 
 def test_bpe_merges_memo_is_pure_cache(spark):
+    from mapreduce_rust_spark import memo
     from mapreduce_rust_spark.llm import bpe
     words = spark.createDataFrame(
         [("abab", 4), ("abc", 2), ("bc", 5)], "w string, freq long")
-    bpe._MERGES_MEMO.clear()
+    memo.clear_results()
+    misses = memo.COUNTS["bpe_merges", "miss"]
     first = bpe.bpe_train(words, 3)
-    assert len(bpe._MERGES_MEMO) == 1
+    assert memo.COUNTS["bpe_merges", "miss"] == misses + 1
     again = bpe.bpe_train(words, 3)
     assert again == first
-    bpe._MERGES_MEMO.clear()
+    memo.clear_results()
     fresh = bpe.bpe_train(words, 3)
     assert fresh == first   # the memo never changes the result
     # a different merge budget is a different key, not a stale hit

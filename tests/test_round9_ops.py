@@ -47,8 +47,8 @@ def test_triangle_table_memo_hit_and_miss(spark):
     materialized frame for the same edge plan and MISS for a
     different (e.g. planted-test) edge plan — stale reuse across
     inputs would silently corrupt all three queries."""
-    from mapreduce_rust_spark.operators.graph import (
-        _TRI_MEMO, triangle_table_cached)
+    from mapreduce_rust_spark import memo
+    from mapreduce_rust_spark.operators.graph import triangle_table_cached
 
     e1 = spark.createDataFrame(
         [(1, 2), (1, 3), (2, 3), (3, 4)], "u long, v long")
@@ -60,8 +60,7 @@ def test_triangle_table_memo_hit_and_miss(spark):
     c = triangle_table_cached(e2, 3)
     assert c is not a, "different edge plan must miss"
     assert {tuple(sorted(r)) for r in a.collect()} == {(1, 2, 3)}
-    for k in [k for k, v in list(_TRI_MEMO.items()) if v in (a, c)]:
-        _TRI_MEMO.pop(k).unpersist()
+    memo.clear_results()
 
 
 def test_ktruss_peel_cascade_planted(spark):
