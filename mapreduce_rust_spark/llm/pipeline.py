@@ -167,13 +167,17 @@ def connected_components(edges_df: DataFrame,
         # min); tests cover both paths.
         mapping = _local_union_find(
             (r[0], r[1]) for r in pairs.toLocalIterator())
-        spark = edges_df.sparkSession
+        # a pandas frame with the edge type's dtype goes the Arrow
+        # path: no PythonRDD, so reading it starts no Python task
+        import pandas as pd
+        from pyspark.sql.pandas.types import to_arrow_type
         from pyspark.sql.types import StructField, StructType
         node_t = edges_df.schema["doc_a"].dataType
         schema = StructType([StructField("node", node_t),
                              StructField("rep", node_t)])
-        return spark.createDataFrame(
-            sorted(mapping.items()), schema)
+        frame = pd.DataFrame(sorted(mapping.items()), columns=["node", "rep"],
+                             dtype=to_arrow_type(node_t).to_pandas_dtype())
+        return edges_df.sparkSession.createDataFrame(frame, schema)
 
     edges = (pairs
              .union(pairs.select(F.col("doc_b").alias("doc_a"),
@@ -363,38 +367,28 @@ def pagerank(edges_df: DataFrame, iters: int = PR_ITERS,
     (``src``/``dst`` columns; both directions are materialized
     internally). The second iterative graph operator (with
     ``connected_components``): per round one join edges⋈ranks and one
-    aggregation on dst — both shuffle-keyed on node id, lineage
-    truncated per round with localCheckpoint, exactly the loop shape
-    that scales to a 1000-executor graph. Undirected edges mean every
-    node has out-degree ≥ 1, so there is no dangling-mass term.
+    aggregation on dst — both shuffle-keyed on node id, with no
+    per-round checkpoint (``graph._rank_rounds``, the loop shared with
+    the two exact forms). Undirected edges mean every node has
+    out-degree ≥ 1, so there is no dangling-mass term.
 
     Float note: rank sums are double adds in shuffle order, so exact
     bit-reproducibility is NOT claimed (tests compare to a numpy
     power iteration at 1e-9); the driver check is rows-only."""
+    from mapreduce_rust_spark.operators.graph import _rank_rounds
     pairs = edges_df.select(F.col("src").alias("a"), F.col("dst").alias("b"))
-    edges = (pairs.union(pairs.select(F.col("b").alias("a"),
-                                      F.col("a").alias("b")))
-                  .distinct().localCheckpoint())
-    deg = edges.groupBy("a").agg(F.count("*").alias("out_deg"))
-    nodes = deg.select(F.col("a").alias("node"), "out_deg").localCheckpoint()
-    n = nodes.count()
-    ranks = nodes.select("node", F.lit(1.0 / n).alias("rank"))
-    for _ in range(iters):
-        contribs = (edges.join(ranks.withColumnRenamed("node", "a"), "a")
-                         .join(nodes.select(F.col("node").alias("a"),
-                                            "out_deg"), "a")
-                         .select(F.col("b").alias("node"),
-                                 (F.col("rank") / F.col("out_deg"))
-                                 .alias("c"))
-                         .groupBy("node").agg(F.sum("c").alias("c")))
-        ranks = (nodes.select("node")
-                      .join(contribs, "node", "left")
-                      .select("node",
-                              (F.lit((1.0 - damping) / n)
-                               + F.lit(damping) * F.coalesce("c", F.lit(0.0)))
-                              .alias("rank"))
-                      .localCheckpoint())
-    return ranks
+    adj = (pairs.union(pairs.select(F.col("b").alias("a"),
+                                    F.col("a").alias("b")))
+                .distinct().localCheckpoint(eager=False))
+    # the n count materializes both checkpoints in one job
+    deg = (adj.groupBy(F.col("a").alias("node"))
+              .agg(F.count("*").alias("deg"))
+              .localCheckpoint(eager=False))
+    n = deg.count()
+    r = deg.select("node", "deg", F.lit(1.0 / n).alias("rank"))
+    r = _rank_rounds(adj, deg, n, r, iters, F.col("rank") / F.col("deg"),
+                     F.lit((1.0 - damping) / n) + F.lit(damping) * F.col("c"))
+    return r.select("node", "rank")
 
 
 def pagerank_copurchase_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -434,6 +428,53 @@ KMEANS_K = 8
 KMEANS_ITERS = 5
 
 
+def _lloyd_rounds(vql: DataFrame, k: int, iters: int, cnew: F.Column):
+    """``iters`` Lloyd's rounds over the long ``(vec_id, dim, q)``
+    table: the one loop of both k-means forms. Init: the k lowest
+    vec_ids are clusters 0..k-1. Each round joins the table to the
+    broadcast ``(cid, dim, c)`` centroids, sums squared differences
+    per (vec_id, cid), keeps each vector's (d², cid)-least cluster and
+    sets every centroid dim to ``cnew``, an aggregate over its
+    members' ``q``; the k×dim update is broadcast too. A cluster left
+    without members keeps its previous centroid. No centroid leaves the cluster, so the rounds form one
+    plan; each round's assignment and centroids are checkpointed
+    lazily, which truncates lineage and pins the blocks the next
+    round re-reads without an extra job.
+
+    Returns ``(assign, cents)``: the last round's ``(vec_id, cid, d2)``
+    assignment, computed from the centroids before its update, and
+    the final ``(cid, dim, c)`` centroids."""
+    from pyspark.sql import Window as W
+    vql = vql.localCheckpoint(eager=False)      # re-read every round
+    seeds = (vql.where(F.col("dim") == 0).select("vec_id")
+             .orderBy("vec_id").limit(k)
+             .select("vec_id",
+                     (F.row_number().over(
+                         W.orderBy("vec_id")) - 1).cast("long")
+                     .alias("cid")))
+    cents = (vql.join(F.broadcast(seeds), "vec_id")
+             .select("cid", "dim", F.col("q").alias("c"))
+             .localCheckpoint(eager=False))
+    assign = None
+    for _ in range(iters):
+        d2 = (vql.join(F.broadcast(cents), "dim")
+              .groupBy("vec_id", "cid")
+              .agg(F.sum((F.col("q") - F.col("c"))
+                         * (F.col("q") - F.col("c"))).alias("d2")))
+        wv = W.partitionBy("vec_id").orderBy("d2", "cid")
+        assign = (d2.withColumn("rk", F.row_number().over(wv))
+                  .where(F.col("rk") == 1)
+                  .select("vec_id", "cid", "d2")
+                  .localCheckpoint(eager=False))
+        upd = (vql.join(assign.select("vec_id", "cid"), "vec_id")
+               .groupBy("cid", "dim").agg(cnew.alias("cnew")))
+        cents = (cents.join(F.broadcast(upd), ["cid", "dim"], "left")
+                 .select("cid", "dim",
+                         F.coalesce("cnew", "c").alias("c"))
+                 .localCheckpoint(eager=False))
+    return assign, cents
+
+
 def kmeans_embeddings(spark: SparkSession, sf_dir: str,
                       k: int = KMEANS_K,
                       iters: int = KMEANS_ITERS) -> DataFrame:
@@ -442,56 +483,29 @@ def kmeans_embeddings(spark: SparkSession, sf_dir: str,
     PageRank), and the unsupervised replacement for the label-based
     IVF training in ``label_centroids``.
 
-    Per round: assignment is a broadcast of k centroids joined under
-    the corpus (cost k×|corpus| distance evaluations, corpus never
-    shuffled for it) + one argmin; the update is one (cluster, dim)
-    mean aggregation whose k×dim result is collected to the driver
-    for the next round's literals — the same partials-to-driver shape
-    Spark MLlib's own k-means uses (k×dim doubles, constant in corpus
-    size). Deterministic: init = the k lowest vec_ids, ties in argmin
-    broken by cluster id. Rows-only driver check (float means);
-    pytest verifies monotone inertia and parity with a numpy Lloyd's
-    run from the same init.
+    Per round (``_lloyd_rounds``, the loop shared with
+    ``kmeans_exact_embeddings``): assignment joins the long
+    (vec_id, dim, value) table to k×dim broadcast centroids (cost
+    k×|corpus| distance terms, corpus never shuffled for it) + one
+    argmin; the update is one (cluster, dim) mean aggregation that
+    stays a DataFrame — no centroid is collected to the driver.
+    Deterministic: init = the k lowest vec_ids, ties in argmin broken
+    by cluster id, an empty cluster keeps its previous centroid.
+    Rows-only driver check (float means); pytest verifies parity with
+    a numpy Lloyd's run from the same init.
 
     ``localCheckpoint`` note: on a real cluster the checkpoint blocks
     live in EXECUTOR storage (not a reliable filesystem) and lineage
     is truncated — an executor loss mid-job would fail the query
-    rather than recompute. That is the right trade here (the
-    projected table is re-read k×iters times; a reliable
-    ``checkpoint()`` to HDFS/S3 is the swap for fault-tolerant runs),
-    same note as every ``localCheckpoint`` site in this package."""
-    from pyspark.sql import Window as W
+    rather than recompute. That is the right trade here (the long
+    table is re-read twice per round; a reliable ``checkpoint()`` to
+    HDFS/S3 is the swap for fault-tolerant runs), same note as every
+    ``localCheckpoint`` site in this package."""
     from mapreduce_rust_spark.functions.vector import to_double
-    emb = (load_table(spark, sf_dir, "embeddings")
-           .select("vec_id", to_double(F.col("embedding")).alias("e"))
-           .localCheckpoint())
-    dim = len(emb.first()["e"])
-    cents = [(int(r["vec_id"]), list(r["e"]))
-             for r in emb.orderBy("vec_id").limit(k).collect()]
-    cents = [(i, v) for i, (_, v) in enumerate(cents)]
-
-    assign = None
-    for _ in range(iters):
-        cent_rows = spark.createDataFrame(
-            [(cid, vec) for cid, vec in cents], ["cid", "c"])
-        d2 = F.aggregate(
-            F.zip_with(F.col("e"), F.col("c"),
-                       lambda x, y: (x - y) * (x - y)),
-            F.lit(0.0), lambda acc, v: acc + v)
-        scored = (emb.crossJoin(F.broadcast(cent_rows))
-                     .select("vec_id", "e", "cid", d2.alias("d2")))
-        w = W.partitionBy("vec_id").orderBy("d2", "cid")
-        assign = (scored.withColumn("rk", F.row_number().over(w))
-                        .filter(F.col("rk") == 1)
-                        .select("vec_id", "e", "cid", "d2"))
-        new = (assign.select("cid", F.posexplode("e").alias("dim", "v"))
-                     .groupBy("cid", "dim").agg(F.avg("v").alias("m"))
-                     .groupBy("cid")
-                     .agg(F.transform(
-                         F.array_sort(F.collect_list(F.struct("dim", "m"))),
-                         lambda x: x["m"]).alias("c"))
-                     .collect())
-        cents = [(int(r["cid"]), list(r["c"])) for r in new]
+    vql = (load_table(spark, sf_dir, "embeddings")
+           .select("vec_id", F.posexplode(to_double(F.col("embedding")))
+                   .alias("dim", "q")))
+    assign, _ = _lloyd_rounds(vql, k, iters, F.avg("q"))
     return assign.select("vec_id", F.col("cid").cast("long").alias("cluster"),
                          F.col("d2").alias("dist2"))
 
@@ -524,57 +538,23 @@ def kmeans_exact_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     production-convenient variant (numpy-parity-tested); this is the
     provable twin, as pagerank_exact is to pagerank.
 
-    Scale: per round, one (dim)-keyed join of the long table against
-    k×dim broadcast centroids + two aggregates; the corpus long
-    table is materialized once and re-read per round (the
-    adjacency-materialization lesson). Init = the k lowest vec_ids.
+    Scale: the float form's loop (``_lloyd_rounds``) — per round one
+    (dim)-keyed join of the long table against k×dim broadcast
+    centroids + two aggregates; the corpus long table is materialized
+    once and re-read per round (the adjacency-materialization
+    lesson). Init = the k lowest vec_ids.
 
     Output: ``(cid, n_vecs, inertia_q, centroid_checksum)`` —
     inertia in grid² units, checksum = Σ c·(dim+1) over dims.
     """
-    from pyspark.sql import Window as W
-    emb = load_table(spark, sf_dir, "embeddings")
-    vql = (emb.select(
+    vql = (load_table(spark, sf_dir, "embeddings").select(
             "vec_id",
             F.posexplode(F.transform(
                 F.col("embedding"),
                 lambda x: F.bround(x.cast("double") * KM_EXACT_GRID)
-                           .cast("long"))).alias("dim", "q"))
-           # lazy (round 13): no driver collect splits the rounds, so
-           # the final action materializes the whole chain as ONE job
-           # while each checkpoint still truncates lineage and pins
-           # its blocks for the per-round re-reads (the pagerank
-           # no-eager lesson applied to the quantized long table)
-           .localCheckpoint(eager=False))    # re-read every round
-    seeds = (emb.select("vec_id").orderBy("vec_id").limit(KM_EXACT_K)
-             .select("vec_id",
-                     (F.row_number().over(
-                         W.orderBy("vec_id")) - 1).cast("long")
-                     .alias("cid")))
-    cents = (vql.join(F.broadcast(seeds), "vec_id")
-             .select("cid", "dim", F.col("q").alias("c"))
-             .localCheckpoint(eager=False))
-    assign = None
-    for _ in range(KM_EXACT_ITERS):
-        d2 = (vql.join(F.broadcast(cents), "dim")
-              .groupBy("vec_id", "cid")
-              .agg(F.sum((F.col("q") - F.col("c"))
-                         * (F.col("q") - F.col("c"))).alias("d2")))
-        wv = W.partitionBy("vec_id").orderBy("d2", "cid")
-        assign = (d2.withColumn("rk", F.row_number().over(wv))
-                  .where(F.col("rk") == 1)
-                  .select("vec_id", "cid", "d2")
-                  .localCheckpoint(eager=False))
-        upd = (vql.join(assign.select("vec_id", "cid"), "vec_id")
-               .groupBy("cid", "dim")
-               .agg(F.sum("q").alias("s"), F.count("*").alias("n"))
-               .select("cid", "dim",
-                       F.expr("s DIV n").alias("cnew")))
-        # empty-cluster guard: keep the previous centroid
-        cents = (cents.join(upd, ["cid", "dim"], "left")
-                 .select("cid", "dim",
-                         F.coalesce("cnew", "c").alias("c"))
-                 .localCheckpoint(eager=False))
+                           .cast("long"))).alias("dim", "q")))
+    assign, cents = _lloyd_rounds(vql, KM_EXACT_K, KM_EXACT_ITERS,
+                                  F.expr("sum(q) DIV count(*)"))
     chk = (cents.groupBy("cid")
            .agg(F.sum(F.col("c") * (F.col("dim") + 1))
                 .cast("long").alias("centroid_checksum")))

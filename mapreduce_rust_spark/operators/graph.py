@@ -104,6 +104,49 @@ def _bidir_adjacency(edges: DataFrame) -> DataFrame:
             .localCheckpoint(eager=True))
 
 
+def _rank_rounds(adj: DataFrame, deg: DataFrame, n: int, r: DataFrame,
+                 iters: int, share: F.Column, update: F.Column) -> DataFrame:
+    """``iters`` rounds of rank propagation: the one loop of the float
+    ``llm/pipeline.pagerank``, ``pagerank_exact_parts`` and
+    ``ppr_seeded_parts``. ``adj`` is ``(a, b)`` with both directions of
+    every edge, ``deg`` is ``(node, deg)`` over the ``n`` nodes with an
+    edge, and ``r`` is the starting ``(node, deg, rank)``.
+
+    Each round sends ``share`` (over ``rank`` and ``deg``) along every
+    adjacency row, sums it per receiving node as ``c`` (0 where nothing
+    arrives), sets ``rank = update`` on every node of ``deg`` and keeps
+    the rows with rank > 0: a no-op for the global forms, whose base is
+    positive, and the frontier cut for the seeded one. A round is one
+    adjacency ⋈ rank join, one ``(node)`` sum and one left join back
+    onto ``deg``. When ``n`` rows fit the session's
+    ``spark.sql.autoBroadcastJoinThreshold`` (``n`` bounds every
+    round's rank table, a seeded frontier included), the sent ranks
+    are broadcast and the summed ``c`` joins ``deg`` by shuffled hash
+    where both already sit hash-partitioned on node: ``deg``'s
+    exchange is reused across rounds, so a round costs two jobs, the
+    broadcast and the contribution shuffle.
+
+    No round is checkpointed. The rounds form one plan whose shuffle
+    outputs materialize at each exchange anyway, and Spark reuses them
+    within the job. An eager per-round ``localCheckpoint`` made
+    ``pagerank_exact_parts`` 4.5x slower (2.2 s -> 10 s at sf0.1);
+    a checkpoint pays only where a driver-side collect splits the
+    rounds into separate jobs, which this loop never does."""
+    conf = adj.sparkSession._jsparkSession.sessionState().conf()
+    # the sent (a, s) rows are two 8-byte columns each
+    fits = 0 <= 16 * n <= conf.autoBroadcastJoinThreshold()
+    for _ in range(iters):
+        sent = r.select(F.col("node").alias("a"), share.alias("s"))
+        c = (adj.join(F.broadcast(sent) if fits else sent, "a")
+             .groupBy(F.col("b").alias("node"))
+             .agg(F.sum("s").alias("c")))
+        r = (deg.join(c.hint("shuffle_hash") if fits else c, "node", "left")
+             .withColumn("c", F.coalesce("c", F.lit(0)))
+             .select("node", "deg", update.alias("rank"))
+             .where(F.col("rank") > 0))
+    return r
+
+
 # The capped-basket edge CTE every graph oracle embeds — interpolates
 # COPURCHASE_MAX_BASKET so the SQL mirror can never drift from the
 # Spark-side cap (guarded by the cap-mirror assertion in
@@ -692,42 +735,26 @@ def pagerank_exact_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg ulps of 10⁻¹² per node per round — quantization error, not
     nondeterminism. Undirected edges ⇒ deg ≥ 1, no dangling mass.
 
-    Scale: identical loop shape to the float form — per round one
-    join on node id + one integer-sum aggregate; 3 unrolled rounds.
+    Scale: the float form's loop (``_rank_rounds``) — per round one
+    join on node id + one integer-sum aggregate; 3 rounds.
     Inherits ``COPURCHASE_MAX_BASKET``. The float ``pagerank``
     (10 iters, numpy-pinned) remains the production form; this one
     exists so the driver artifact hash-verifies the propagation
     machinery end to end."""
     li = load_table(spark, sf_dir, "lineitem")
     adj = _bidir_adjacency(copurchase_edges_cached(li))
-    # round 13: same deg dedup as ppr_seeded_parts (2 refs/round);
-    # the n count right below materializes it in its own job
-    deg = (adj.groupBy("a").agg(F.count("*").alias("deg"))
+    # deg is re-read every round; the n count materializes it once
+    deg = (adj.groupBy(F.col("a").alias("node"))
+           .agg(F.count("*").alias("deg"))
            .localCheckpoint(eager=False))
     n = deg.count()
     base = (15 * PR_EXACT_GRID) // (100 * n)
-    r = deg.select(F.col("a").alias("node"),
-                   F.lit(PR_EXACT_GRID // n).alias("rq"))
-    for _ in range(PR_EXACT_ITERS):
-        c = (adj.join(r.withColumnRenamed("node", "a"), "a")
-             .join(deg, "a")
-             .select(F.col("b").alias("node"),
-                     F.expr("rq DIV deg").alias("s"))
-             .groupBy("node").agg(F.sum("s").alias("c")))
-        # deliberately NOT checkpointed per round: the 3 rounds form
-        # ONE job whose shuffle outputs materialize at each exchange
-        # anyway (Spark reuses in-job shuffle files — no re-execution);
-        # measured: eager per-round localCheckpoint made this 4.5x
-        # SLOWER (2.2 s -> 10 s at sf0.1). Checkpointing earns its keep
-        # only when a driver-side collect splits rounds into separate
-        # jobs (k-means/BPE), which this loop never does.
-        r = (deg.select(F.col("a").alias("node"))
-             .join(c, "node", "left")
-             .select("node",
-                     (F.lit(base)
-                      + F.expr(f"({PR_EXACT_DAMP_NUM} * coalesce(c, 0))"
-                               f" DIV 100")).alias("rq")))
-    return r.select("node", F.col("rq").cast("long").alias("rq"))
+    r = deg.select("node", "deg", F.lit(PR_EXACT_GRID // n).alias("rank"))
+    r = _rank_rounds(adj, deg, n, r, PR_EXACT_ITERS,
+                     F.expr("rank DIV deg"),
+                     F.lit(base)
+                     + F.expr(f"({PR_EXACT_DAMP_NUM} * c) DIV 100"))
+    return r.select("node", F.col("rank").cast("long").alias("rq"))
 
 
 def _pagerank_exact_oracle() -> str:
@@ -781,8 +808,7 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     semi-joins (both endpoints must survive), the exact shape the
     oracle's chained CTEs replay. Convergence detection (loop until
     no node drops) is the production variant — same per-round plan,
-    driver-side 1-row count check per round, the k-means/BPE loop
-    pattern. Inherits ``COPURCHASE_MAX_BASKET``; lineage truncated
+    driver-side 1-row count check per round. Inherits ``COPURCHASE_MAX_BASKET``; lineage truncated
     per round.
 
     Output: ``(part, core_deg)`` for nodes alive after the rounds.
@@ -793,8 +819,8 @@ def kcore_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     # later round a no-op, so skipping them is SEMANTICALLY identical
     # to running all KCORE_ROUNDS (the oracle runs the full unrolled
     # chain — hash equality is the proof). One 1-row driver count per
-    # round, the k-means/BPE loop pattern; on the sf0.1 co-purchase
-    # graph this converges after round 1 (4.5 s → ~2 s).
+    # round; on the sf0.1 co-purchase graph this converges after
+    # round 1 (4.5 s → ~2 s).
     n_prev = alive.count()
     for _ in range(KCORE_ROUNDS):
         deg = alive.groupBy("a").agg(F.count("*").alias("d"))
@@ -856,46 +882,27 @@ def ppr_seeded_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Nodes never reached keep rank 0 and are dropped, so the output is
     bounded by the seeds' 3-hop neighborhood, not the graph.
 
-    Scale: identical per-round join+agg shape as pagerank_exact; at
+    Scale: the same loop as pagerank_exact (``_rank_rounds``); at
     100 TB the ranks table starts seed-sized and grows with the
     frontier only. Inherits ``COPURCHASE_MAX_BASKET``.
     """
     li = load_table(spark, sf_dir, "lineitem")
     adj = _bidir_adjacency(copurchase_edges_cached(li))
-    # round 13: deg is referenced 2x per unrolled round (contribution
-    # join + rank base) = 6+ subtree executions of the degree agg
-    # under the per-round broadcast builds (measured 18 jobs vs the
-    # un-hinted pagerank's 7); one lazy checkpoint executes it once
-    deg = (adj.groupBy("a").agg(F.count("*").alias("deg"))
+    # deg is re-read every round; the n count materializes it once
+    deg = (adj.groupBy(F.col("a").alias("node"))
+           .agg(F.count("*").alias("deg"))
            .localCheckpoint(eager=False))
+    n = deg.count()
     n_seeds = len(PPR_SEEDS)
-    seed0 = PR_EXACT_GRID // n_seeds
     base = (15 * PR_EXACT_GRID) // (100 * n_seeds)
     is_seed = F.col("node").isin(*PPR_SEEDS)
-    r = (deg.select(F.col("a").alias("node"))
-         .where(is_seed)
-         .select("node", F.lit(seed0).alias("rq")))
-    for _ in range(PR_EXACT_ITERS):
-        # broadcast hint on r: measured 4.8 s -> 3.6 s at sf0.1 (the
-        # separate adjacency-materialization fix is accounted in
-        # SCALE.md). Honest caveat: r is FRONTIER-sized, and on a
-        # small-world graph the 3-hop frontier can approach all n
-        # nodes — a deployment with broad seed sets should drop the
-        # hint and let AQE decide, which is exactly what the global
-        # pagerank_exact_parts (always n-sized r) does.
-        c = (adj.join(F.broadcast(r.withColumnRenamed("node", "a")), "a")
-             .join(deg, "a")
-             .select(F.col("b").alias("node"),
-                     F.expr("rq DIV deg").alias("s"))
-             .groupBy("node").agg(F.sum("s").alias("c")))
-        r = (deg.select(F.col("a").alias("node"))
-             .join(c, "node", "left")
-             .select("node",
-                     (F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
-                      + F.expr(f"({PR_EXACT_DAMP_NUM} * coalesce(c, 0))"
-                               f" DIV 100")).alias("rq"))
-             .where(F.col("rq") > 0))
-    return r.select("node", F.col("rq").cast("long").alias("rq"))
+    r = (deg.where(is_seed)
+         .select("node", "deg", F.lit(PR_EXACT_GRID // n_seeds).alias("rank")))
+    r = _rank_rounds(adj, deg, n, r, PR_EXACT_ITERS,
+                     F.expr("rank DIV deg"),
+                     F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
+                     + F.expr(f"({PR_EXACT_DAMP_NUM} * c) DIV 100"))
+    return r.select("node", F.col("rank").cast("long").alias("rq"))
 
 
 def _ppr_oracle() -> str:

@@ -41,30 +41,25 @@ def oracles() -> dict[str, str]:
 
 
 # The 50 queries the driver verifies this round (see module docstring).
-# Round-13 window (the round-12 window went 50/50 green — see
-# COVERAGE.md): VERDICT r12 item 1 verbatim — the queries most
-# heavily REWRITTEN by the round-12 optimizer (similarity-family
-# numpy kernels, the PQ code-assignment kernel, the codec spreads +
-# ADPCM vectorize, the shared co-purchase edge-table spread) have no
-# driver row on the rewritten code; front-load ALL of them so every
-# kernel rewrite gets a hash-verified row, then this round's own
-# rewrite set (BPE memo/kernel, the basket-pipeline subtree fusion)
-# and a 6-twin sample of the round-13 lazy-checkpoint change to the
-# stream closed forms (the other ~34 twins share the identical
-# one-line change and are builder-oracled at sf0.01 + sf0.1).
-# embedding_pca_topk (also rewritten, rows-only registration) is
-# deliberately NOT given a slot — a slot without a hash check proves
-# little; its exactness rides on embedding_covariance's row (same
-# Gram kernel). The r4-mass TPC-H tail stays queued in COVERAGE.md.
+# The round-13 window went 50/50 green (CORRECTNESS_r13.json, see
+# COVERAGE.md). Its first 11 rows (the similarity/PQ kernel rewrites
+# and jpeg_gray_roundtrip) rotate out for the 11 rank-test closed
+# forms fused after round 13, which have no driver row on the fused
+# code yet. The rest of the round-13 window stays; among it
+# pagerank_exact_parts, ppr_seeded_parts and kmeans_exact_embeddings,
+# whose loops now run through the shared ``graph._rank_rounds`` and
+# ``pipeline._lloyd_rounds``. embedding_pca_topk (rows-only) still gets
+# no slot: its Gram kernel rides on embedding_covariance's green rows.
 DRIVER_WINDOW = [
-    # --- r12 rewrites: similarity-family numpy kernels ---
-    "knn_lsh", "lsh_bucket_stats",
-    "allknn_within_label", "knn_label_consensus",
-    "knn_eval_recall", "cosine_hist_embeddings",
-    "mmr_diverse_topk", "embedding_covariance",
-    "pq_assign_embeddings", "knn_pq_adc",
+    # --- rank-test closed forms fused after round 13 (one ordered
+    # window + one grouped aggregate, no join) ---
+    "kruskal_wallis_events", "stream_kruskal_wallis",
+    "mood_median_k_events", "stream_mood_median_k",
+    "tukey_fences_orders", "friedman_events", "stream_friedman",
+    "t_closeness_orders", "stream_t_closeness",
+    "hodges_lehmann_events", "stream_hodges_lehmann",
     # --- r12 rewrites: codec kernel spreads + ADPCM vectorize ---
-    "jpeg_gray_roundtrip", "jpeg_color_roundtrip",
+    "jpeg_color_roundtrip",
     "rasterize_glyph_metrics", "multimodal_video_frames",
     "video_scene_cuts",
     "multimodal_audio_pcm_stats", "multimodal_audio_adpcm_stats",
@@ -74,7 +69,8 @@ DRIVER_WINDOW = [
     # --- r12 rewrites: text-stage spreads ---
     "dup_span_docs", "collocations_pmi_docs",
     # --- r12 rewrite: spread inside the shared co-purchase edge
-    # build — every consumer of the memoized edge table ---
+    # build — every consumer of the memoized edge table; PPR and
+    # PageRank also run the shared rank loop ---
     "triangle_count_copurchase", "copurchase_degree_hist",
     "assortativity_copurchase", "clustering_coeff_parts",
     "kcore_parts", "ktruss_edges_parts",
@@ -82,7 +78,8 @@ DRIVER_WINDOW = [
     "edge_support_hist_parts", "linkpred_common_neighbors",
     "linkpred_resource_allocation", "rich_club_copurchase",
     "harmonic_centrality_seeds", "component_stats_parts",
-    # --- round-13 rewrites (this round's optimizer targets) ---
+    # --- round-13 rewrites; k-means also runs the shared Lloyd's
+    # loop ---
     "bpe_train_merges", "bpe_encode_docs",
     "assoc_rules_parts", "item_cf_neighbors",
     "kmeans_exact_embeddings",

@@ -76,6 +76,10 @@ def test_connected_components_local_gate_matches_distributed(spark):
             for r in connected_components(edges,
                                           local_threshold=0).collect()}
     assert local == dist == set(_union_find(chain + extra).items())
+    # the driver-side mapping goes the Arrow path: no Python task
+    lineage = (connected_components(edges)._jdf.queryExecution()
+               .toRdd().toDebugString())
+    assert "PythonRDD" not in lineage, lineage
 
 
 def test_neardup_keep_best_picks_cluster_argmax(spark):
@@ -223,3 +227,37 @@ def test_kmeans_matches_numpy_lloyds(spark):
     assert agree >= 0.99 * len(ids)
     assert abs(inertia - want_inertia) <= 0.001 * want_inertia
     assert len({r.cluster for r in rows}) > 1
+
+
+def test_kmeans_keeps_the_centroid_of_an_empty_cluster(spark, tmp_path):
+    """Planted: the two lowest vec_ids are the same vector, so the two
+    initial centroids tie for every vector, the (d2, cid) tie-break
+    sends all of them to cluster 0 and cluster 1 is left empty. It
+    must keep its centroid, as in a numpy Lloyd's run, and win back
+    its two vectors in the next round once cluster 0 has moved."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from mapreduce_rust_spark.llm.pipeline import (
+        KMEANS_ITERS, kmeans_embeddings)
+    vecs = [(0.0, 0.0), (0.0, 0.0), (10.0, 10.0), (10.0, 11.0),
+            (11.0, 10.0)]
+    pq.write_table(pa.table({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float32())),
+        "label": pa.array([0] * len(vecs), pa.int32())}),
+        tmp_path / "embeddings.parquet")
+    rows = kmeans_embeddings(spark, str(tmp_path), k=2).collect()
+    X = np.array(vecs)
+    C = X[:2].copy()
+    for _ in range(KMEANS_ITERS):
+        d = ((X[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
+        a = d.argmin(axis=1)
+        for c in range(2):
+            if (a == c).any():
+                C[c] = X[a == c].mean(axis=0)
+    assert {r.vec_id: r.cluster for r in rows} == dict(enumerate(a))
+    assert {r.vec_id: r.cluster for r in rows} == {0: 1, 1: 1, 2: 0,
+                                                   3: 0, 4: 0}
+    for r in rows:
+        assert abs(r.dist2 - d.min(axis=1)[r.vec_id]) < 1e-9

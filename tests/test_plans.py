@@ -412,6 +412,34 @@ def test_bpe_train_job_count_is_constant_in_merges(spark):
     assert n_one == n_eight <= 2 + 1, (n_one, n_eight)
 
 
+def test_pagerank_jobs_per_round_are_bounded(spark):
+    """A PageRank round adds a fixed handful of jobs and no per-round
+    checkpoint job. Measured on a 7-node graph: 2 jobs per round (the
+    rank broadcast and the contribution shuffle)."""
+    from mapreduce_rust_spark.llm.pipeline import pagerank
+    edges = spark.createDataFrame(
+        [(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (5, 6)],
+        "src long, dst long")
+    _, two = _jobs_during(spark, lambda: pagerank(edges, iters=2).collect())
+    _, four = _jobs_during(spark, lambda: pagerank(edges, iters=4).collect())
+    assert four - two <= 2 * (2 + 1), (two, four)
+
+
+def test_kmeans_jobs_per_round_are_bounded(spark):
+    """A Lloyd's round adds a fixed handful of jobs and no driver
+    collect. Measured at sf0.001: 6 jobs per round (the centroid
+    broadcast, the distance shuffle, the argmin window's shuffle, the
+    member join, the centroid-update shuffle and its broadcast)."""
+    from mapreduce_rust_spark.llm.pipeline import kmeans_embeddings
+    from tests.conftest import SF_SMOKE
+    kmeans_embeddings(spark, SF_SMOKE, iters=1).collect()  # footer reads
+    _, two = _jobs_during(
+        spark, lambda: kmeans_embeddings(spark, SF_SMOKE, iters=2).collect())
+    _, four = _jobs_during(
+        spark, lambda: kmeans_embeddings(spark, SF_SMOKE, iters=4).collect())
+    assert four - two <= 2 * (6 + 1), (two, four)
+
+
 def test_evaluation_plan_shapes(spark):
     """Classifier-eval pins:
     - AUC: the DATA-carrying prefix window sub-shards on the score
