@@ -60,11 +60,8 @@ def _ensure_self_shipping() -> None:
     is the durable route; this makes local/embedded use just work.
     """
     import mapreduce_rust_spark
-    try:
-        from pyspark import cloudpickle
-        cloudpickle.register_pickle_by_value(mapreduce_rust_spark)
-    except Exception:
-        pass  # already registered / vendored API moved — harmless
+    from pyspark import cloudpickle
+    cloudpickle.register_pickle_by_value(mapreduce_rust_spark)
 
 
 def _group_runner(reduce_fn: ReduceFn) -> Callable[[Iterator[tuple[str, str]]], Iterator[tuple[str, str]]]:

@@ -53,6 +53,7 @@ from pyspark.sql import types as T
 from mapreduce_rust_spark.core.runner import _ensure_self_shipping
 from mapreduce_rust_spark.functions.text import WS_RE
 from mapreduce_rust_spark.memo import session_memo
+from mapreduce_rust_spark.tables import _local_rows
 
 N_MERGES = 8
 
@@ -165,13 +166,8 @@ def _train_batches(batches, n_merges: int):
     vocab = []
     for pdf in batches:
         vocab.extend(zip(pdf["w"].tolist(), pdf["freq"].tolist()))
-    yield _merges_frame(_learn_merges(vocab, n_merges))
-
-
-def _merges_frame(merges: list[tuple]) -> pd.DataFrame:
-    """Merge 5-tuples as a pandas frame with ``MERGES_SCHEMA``'s dtypes."""
     cols = ["step", "left", "right", "merged", "pair_count"]
-    return pd.DataFrame(merges, columns=cols) \
+    yield pd.DataFrame(_learn_merges(vocab, n_merges), columns=cols) \
         .astype({"step": "int32", "pair_count": "int64"})
 
 
@@ -212,11 +208,10 @@ def _train(words: DataFrame, n_merges: int) -> list[tuple]:
 
 def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The learned merge table over ``documents`` (N_MERGES rows:
-    step, left, right, merged, pair_count). Built from a pandas frame,
-    which the Arrow path turns into a JVM relation; a driver list would
-    be re-pickled through a Python task per default-parallelism slot."""
+    step, left, right, merged, pair_count), a JVM relation built on the
+    driver: reading it starts no Python task."""
     merges = bpe_train(_word_freqs(spark, sf_dir), N_MERGES)
-    return spark.createDataFrame(_merges_frame(merges), MERGES_SCHEMA)
+    return _local_rows(spark, merges, MERGES_SCHEMA)
 
 
 def _encode_batches(batches, merges: list[tuple]):

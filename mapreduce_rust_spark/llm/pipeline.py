@@ -10,7 +10,7 @@ from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.llm.dedup import minhash_lsh_pairs
 from mapreduce_rust_spark.memo import session_memo
-from mapreduce_rust_spark.tables import load_table
+from mapreduce_rust_spark.tables import _local_rows, load_table
 
 
 def label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -167,17 +167,11 @@ def connected_components(edges_df: DataFrame,
         # min); tests cover both paths.
         mapping = _local_union_find(
             (r[0], r[1]) for r in pairs.toLocalIterator())
-        # a pandas frame with the edge type's dtype goes the Arrow
-        # path: no PythonRDD, so reading it starts no Python task
-        import pandas as pd
-        from pyspark.sql.pandas.types import to_arrow_type
         from pyspark.sql.types import StructField, StructType
         node_t = edges_df.schema["doc_a"].dataType
-        schema = StructType([StructField("node", node_t),
-                             StructField("rep", node_t)])
-        frame = pd.DataFrame(sorted(mapping.items()), columns=["node", "rep"],
-                             dtype=to_arrow_type(node_t).to_pandas_dtype())
-        return edges_df.sparkSession.createDataFrame(frame, schema)
+        return _local_rows(edges_df.sparkSession, sorted(mapping.items()),
+                           StructType([StructField("node", node_t),
+                                       StructField("rep", node_t)]))
 
     edges = (pairs
              .union(pairs.select(F.col("doc_b").alias("doc_a"),

@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.vector import cosine, dot, to_double, unit
-from mapreduce_rust_spark.tables import load_table
+from mapreduce_rust_spark.tables import _local_rows, load_table
 
 K = 5
 N_QUERIES = 10   # vec_id < 10 are the probe set
@@ -905,8 +905,8 @@ def embedding_pca_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = [(k + 1, float(vals[k]),
              float(vals[k]) / trace if trace != 0.0 else 0.0)
             for k in range(min(PCA_TOP_K, d))]
-    return spark.createDataFrame(
-        rows, "component long, eigenvalue double, explained_ratio double")
+    return _local_rows(spark, rows, "component long, eigenvalue double, "
+                       "explained_ratio double")
 
 
 REGISTRATIONS = [
@@ -1021,8 +1021,8 @@ def mmr_diverse_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 best = (step, vid, rel, score, v)
         sel.append(best[:4])
         sel_vecs.append(best[4])
-    return spark.createDataFrame(
-        [(s, int(v), float(r), float(m)) for s, v, r, m in sel],
+    return _local_rows(
+        spark, [(s, int(v), float(r), float(m)) for s, v, r, m in sel],
         "step long, vec_id long, rel double, mmr_score double")
 
 

@@ -18,7 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.tables import load_table
+from mapreduce_rust_spark.tables import _local_rows, load_table
 
 # fixture spans 2024-01-01 .. 2024-01-30; midpoint split
 EXP_SPLIT = "2024-01-16"
@@ -2386,9 +2386,8 @@ def tau_closed_form(users: DataFrame) -> DataFrame:
             and (ttd - txd) > 0 and (ttd - tyd) > 0:
         import math
         tau = (ncd - ndd) / math.sqrt((ttd - txd) * (ttd - tyd))
-    spark = users.sparkSession
-    return spark.createDataFrame(
-        [(n, ncd, ndd, txd, tyd, tau)],
+    return _local_rows(
+        users.sparkSession, [(n, ncd, ndd, txd, tyd, tau)],
         "n_users long, nc_pairs double, nd_pairs double, "
         "tie_x_pairs double, tie_y_pairs double, tau_b double")
 

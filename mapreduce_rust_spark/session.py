@@ -15,7 +15,11 @@ same code scales to a multi-executor cluster at ~100 TB:
   a zip archive's directory only when the archive changed. Stock
   workers under Python < 3.12 re-read ``pyspark.zip`` on every task,
   about 0.25 s of CPU before user code runs; at scale that cost grows
-  with the task count.
+  with the task count. The daemon imports pandas and pyarrow once, so
+  every forked worker inherits them, and one daemon serves every Python
+  runner: RDD tasks carry the same ``SPARK_SIMPLIFIED_TRACEBACK`` value
+  the SQL runners (pandas UDFs, ``mapInPandas``, ``applyInPandas*``)
+  set, and the JVM keeps one worker pool per distinct env.
 """
 
 from __future__ import annotations
@@ -26,18 +30,26 @@ from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
+_TRACEBACK = "spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"
 
 
 def _with_worker_daemon(builder: SparkSession.Builder) -> SparkSession.Builder:
     """Fork Python workers from ``core/pyworker.py``: name it as the
     daemon module and append the package's parent directory to the
-    workers' ``PYTHONPATH``, keeping a value the builder already holds."""
+    workers' ``PYTHONPATH``, keeping a value the builder already holds.
+
+    The JVM keeps one daemon per distinct worker env, and the SQL
+    runners add ``SPARK_SIMPLIFIED_TRACEBACK=1`` to theirs. Setting the
+    same value for every executor gives RDD tasks (``run_job``,
+    driver-list ``createDataFrame``) that env too, so one daemon, with
+    pandas and pyarrow imported once, serves every Python task."""
     held = builder._options.get(_WORKER_PATH)
     return (builder
             .config("spark.python.daemon.module",
                     "mapreduce_rust_spark.core.pyworker")
             .config(_WORKER_PATH,
-                    os.pathsep.join(p for p in (held, _PACKAGE_ROOT) if p)))
+                    os.pathsep.join(p for p in (held, _PACKAGE_ROOT) if p))
+            .config(_TRACEBACK, "1"))
 
 
 def get_spark(app_name: str = "mapreduce_rust_spark",

@@ -54,6 +54,24 @@ def read_parquet_nanos_fallback(spark: SparkSession, path: str) -> DataFrame:
                 spark.conf.set(_NANOS_AS_LONG, old)
 
 
+def _local_rows(spark: SparkSession, rows, schema) -> DataFrame:
+    """Driver-side ``rows`` (tuples in ``schema``'s column order; a DDL
+    string or a ``StructType``) as a JVM ``LocalTableScan``. The Arrow
+    table is typed from the declared schema, so a ``None`` stays NULL
+    in any column, and reading it runs no job. A driver list would go
+    through an identity ``PythonRDD``: one Python task per
+    default-parallelism slot on every action."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+    from pyspark.sql.types import StructType, _parse_datatype_string
+
+    if not isinstance(schema, StructType):
+        schema = _parse_datatype_string(schema)
+    arrow = to_arrow_schema(schema)
+    return spark.createDataFrame(pa.Table.from_pylist(
+        [dict(zip(arrow.names, r)) for r in rows], schema=arrow))
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Columnar scan of one fixture table (pushdown/pruning capable).
 

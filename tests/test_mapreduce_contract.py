@@ -9,7 +9,7 @@ import pytest
 from hypothesis import given, settings, strategies as st
 
 from mapreduce_rust_spark.core.apps import wc_map, wc_reduce
-from mapreduce_rust_spark.core.runner import run_job
+from mapreduce_rust_spark.core.runner import _ensure_self_shipping, run_job
 from tests.conftest import SF_SMOKE
 
 
@@ -20,6 +20,12 @@ def simulate(splits, map_fn, reduce_fn):
         for k, v in map_fn(s):
             groups[k].append(v)
     return {k: reduce_fn(k, vs) for k, vs in groups.items()}
+
+
+def test_ensure_self_shipping_registers_the_package_by_value():
+    from pyspark import cloudpickle
+    _ensure_self_shipping()
+    assert "mapreduce_rust_spark" in cloudpickle.list_registry_pickle_by_value()
 
 
 def test_wc_contract_matches_simulator(spark):

@@ -121,6 +121,20 @@ def test_build_vocab_rank_is_topk_bounded(spark):
     assert "Window" in plan  # rank still assigned — over ≤K rows only
 
 
+@pytest.mark.parametrize("name", ["kendall_tau_events", "embedding_pca_topk",
+                                  "mmr_diverse_topk"])
+def test_driver_rows_plan_a_local_table_scan(spark, name):
+    """Result rows computed on the driver reach the JVM as an Arrow
+    local table: no ``ExistingRDD`` scan in the executed plan and no
+    ``PythonRDD`` in its lineage, so reading them runs no Python task."""
+    from mapreduce_rust_spark import registry
+    df = registry.queries()[name](spark, SF_CORRECT)
+    p = _plan(df)
+    assert "LocalTableScan" in p and "ExistingRDD" not in p, p
+    lineage = df._jdf.queryExecution().toRdd().toDebugString()
+    assert "PythonRDD" not in lineage, lineage
+
+
 def _jobs_during(spark, fn):
     """(fn(), number of Spark jobs fn ran on the driver thread)."""
     tracker = spark.sparkContext.statusTracker()
