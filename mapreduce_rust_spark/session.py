@@ -20,17 +20,26 @@ same code scales to a multi-executor cluster at ~100 TB:
   runner: RDD tasks carry the same ``SPARK_SIMPLIFIED_TRACEBACK`` value
   the SQL runners (pandas UDFs, ``mapInPandas``, ``applyInPandas*``)
   set, and the JVM keeps one worker pool per distinct env.
+- The daemon boots while the JVM warms up: a ``get_spark`` call that
+  creates the SparkContext also runs a one-task Python job on a
+  background thread, under its own job group, so the daemon's import
+  of pandas and pyarrow overlaps the driver's first SQL plan instead
+  of following it when the first Python task arrives.
 """
 
 from __future__ import annotations
 
 import os
+import threading
+import warnings
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
 _TRACEBACK = "spark.executorEnv.SPARK_SIMPLIFIED_TRACEBACK"
+_POOL_GROUP = "mapreduce_rust_spark.worker_pool"
 
 
 def _with_worker_daemon(builder: SparkSession.Builder) -> SparkSession.Builder:
@@ -52,6 +61,25 @@ def _with_worker_daemon(builder: SparkSession.Builder) -> SparkSession.Builder:
             .config(_TRACEBACK, "1"))
 
 
+def _no_op(_) -> None:
+    pass
+
+
+def _boot_worker_pool(sc: SparkContext) -> None:
+    """Run one Python task under ``_POOL_GROUP``, so the JVM launches the
+    worker daemon and forks a worker now. Returns quietly only when the
+    context was stopped under it; any other error reaches
+    ``threading.excepthook``."""
+    try:
+        sc.setJobGroup(_POOL_GROUP, "boot the Python worker daemon")
+        sc.parallelize([0], 1).foreach(_no_op)
+    except Exception:
+        jsc = sc._jsc
+        if jsc is None or jsc.sc().isStopped():
+            return
+        raise
+
+
 def get_spark(app_name: str = "mapreduce_rust_spark",
               shuffle_partitions: int | None = None) -> SparkSession:
     """Build (or fetch) the tuned SparkSession.
@@ -60,6 +88,11 @@ def get_spark(app_name: str = "mapreduce_rust_spark",
     cores). Shuffle partitions default to the local core count —
     the right number for local mode; a cluster deployment overrides
     via normal Spark conf.
+
+    A call that creates the SparkContext also boots the Python worker
+    daemon on a background thread: one task, job group
+    ``mapreduce_rust_spark.worker_pool``. A call that returns an
+    existing session starts nothing.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     if shuffle_partitions is None:
@@ -81,7 +114,11 @@ def get_spark(app_name: str = "mapreduce_rust_spark",
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
+    creates = SparkContext._active_spark_context is None
     spark = _with_worker_daemon(builder).getOrCreate()
+    if creates:
+        threading.Thread(target=_boot_worker_pool, args=(spark.sparkContext,),
+                         name=_POOL_GROUP, daemon=True).start()
     spark.sparkContext.setLogLevel("WARN")
     # Dims-sized closed forms legitimately use empty-partition windows
     # (cum distributions over ≤ buckets rows); WindowExec warns "moving
@@ -93,6 +130,7 @@ def get_spark(app_name: str = "mapreduce_rust_spark",
         jvm.org.apache.logging.log4j.core.config.Configurator.setLevel(
             "org.apache.spark.sql.execution.window.WindowExec",
             jvm.org.apache.logging.log4j.Level.ERROR)
-    except Exception:  # noqa: BLE001 — cosmetic; never fail the session
-        pass
+    except Exception as exc:  # noqa: BLE001 — cosmetic; never fail the session
+        warnings.warn(f"could not demote the WindowExec logger: {exc!r}",
+                      RuntimeWarning, stacklevel=2)
     return spark

@@ -1,14 +1,19 @@
 """The Python worker daemon ``get_spark`` wires in (``core/pyworker.py``):
 a task's ``importlib.invalidate_caches()`` re-reads a zip archive's
-directory only when the archive changed, and one daemon, with pandas
-and pyarrow imported, serves RDD and Arrow tasks alike."""
+directory only when the archive changed, one daemon, with pandas and
+pyarrow imported, serves RDD and Arrow tasks alike, and a ``get_spark``
+call that creates the context boots that daemon on its own."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
 import sys
+import textwrap
 import zipfile
 import zipimport
+from pathlib import Path
 
 import pandas as pd
 import pytest
@@ -19,6 +24,20 @@ from mapreduce_rust_spark.session import (_PACKAGE_ROOT, _TRACEBACK,
                                           _WORKER_PATH, _with_worker_daemon)
 
 DAEMON = "mapreduce_rust_spark.core.pyworker"
+POOL_GROUP = "mapreduce_rust_spark.worker_pool"
+REPO_ROOT = Path(__file__).resolve().parent.parent
+
+
+def _assert_preloaded(pid: int) -> None:
+    """The daemon ``pid`` maps libarrow and pandas' ``_libs``, so its
+    forked workers inherit pandas and pyarrow."""
+    maps = f"/proc/{pid}/maps"
+    if not os.path.exists(maps):
+        pytest.skip("no /proc to read the daemon's mapped libraries")
+    with open(maps) as f:
+        mapped = f.read()
+    assert "libarrow" in mapped
+    assert f"pandas{os.sep}_libs" in mapped
 
 
 @pytest.mark.skipif(sys.version_info >= (3, 12),
@@ -107,11 +126,137 @@ def test_python_tasks_share_one_preloaded_daemon(spark):
     udf = {r.ppid for r in spark.range(4)
            .select(udf_ppid("id").alias("ppid")).collect()}
     assert len(rdd | arrow | udf) == 1, (rdd, arrow, udf)
+    _assert_preloaded(rdd.pop())
 
-    maps = f"/proc/{rdd.pop()}/maps"
-    if not os.path.exists(maps):
-        pytest.skip("no /proc to read the daemon's mapped libraries")
-    with open(maps) as f:
-        mapped = f.read()
-    assert "libarrow" in mapped
-    assert f"pandas{os.sep}_libs" in mapped
+
+# A fresh ``get_spark`` session in its own process (the ``spark``
+# fixture's daemon already exists). It takes no action of its own: it
+# waits up to 60 s for the daemon to appear below it with pandas and
+# pyarrow mapped and for a boot job to finish, reads the status tracker,
+# calls ``get_spark()`` again and reads it once more. It prints one JSON
+# line and keeps the session, and so the daemon, alive until its stdin
+# closes.
+_BOOT_PROBE = textwrap.dedent("""
+    import json, os, sys, time
+    from mapreduce_rust_spark.session import get_spark
+
+    daemon, group = sys.argv[1].encode(), sys.argv[2]
+
+    def parents():
+        out = {}
+        for d in os.listdir("/proc"):
+            try:
+                with open(f"/proc/{d}/stat") as f:
+                    out[int(d)] = int(f.read().rsplit(")", 1)[1].split()[1])
+            except (OSError, ValueError):
+                pass
+        return out
+
+    def runs_daemon(pid):
+        try:
+            with open(f"/proc/{pid}/cmdline", "rb") as f:
+                cmd = f.read().split(b"\\0")
+        except OSError:
+            return False
+        return b"-m" in cmd and daemon in cmd
+
+    def daemon_pid():
+        parent, below, todo = parents(), set(), [os.getpid()]
+        while todo:
+            up = todo.pop()
+            kids = [p for p, pp in parent.items() if pp == up]
+            below.update(kids)
+            todo += kids
+        # a forked worker keeps its daemon's command line
+        return next((p for p in sorted(below)
+                     if runs_daemon(p) and not runs_daemon(parent[p])), None)
+
+    def preloaded(pid):
+        try:
+            with open(f"/proc/{pid}/maps") as f:
+                maps = f.read()
+        except OSError:
+            return False
+        return "libarrow" in maps and "pandas" + os.sep + "_libs" in maps
+
+    spark = get_spark("pool-boot-probe")
+    tracker = spark.sparkContext.statusTracker()
+    deadline, pid = time.time() + 60, None
+    while time.time() < deadline and not (pid and preloaded(pid)):
+        time.sleep(0.1)
+        pid = daemon_pid()
+
+    def boot_done():
+        ids = tracker.getJobIdsForGroup(group)
+        return ids and tracker.getJobInfo(ids[0]).status == "SUCCEEDED"
+
+    while time.time() < deadline and not boot_done():
+        time.sleep(0.1)
+
+    def jobs():
+        return {"group": sorted(tracker.getJobIdsForGroup(group)),
+                "ungrouped": sorted(tracker.getJobIdsForGroup(None)),
+                "second_job": tracker.getJobInfo(1) is not None}
+
+    first = jobs()
+    get_spark()
+    time.sleep(2)
+    print(json.dumps({"daemon": pid, "first": first, "again": jobs()}), flush=True)
+    sys.stdin.read()
+    spark.stop()
+""")
+
+
+def _probe(code: str, *args: str) -> subprocess.Popen:
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g",
+               PYTHONPATH=os.pathsep.join(
+                   p for p in (str(REPO_ROOT), os.environ.get("PYTHONPATH")) if p))
+    return subprocess.Popen([sys.executable, "-c", code, *args], cwd=REPO_ROOT,
+                            env=env, stdin=subprocess.PIPE,
+                            stdout=subprocess.PIPE, stderr=subprocess.PIPE,
+                            text=True)
+
+
+@pytest.fixture(scope="module")
+def boot_probe():
+    if not os.path.isdir("/proc/self"):
+        pytest.skip("no /proc to find the daemon")
+    probe = _probe(_BOOT_PROBE, DAEMON, POOL_GROUP)
+    try:
+        line = probe.stdout.readline()
+        if not line:
+            probe.wait(timeout=300)
+            pytest.fail(f"the probe printed nothing: {probe.stderr.read()[-3000:]}")
+        yield json.loads(line)
+    finally:
+        _, err = probe.communicate(timeout=300)
+    assert probe.returncode == 0, err[-3000:]
+
+
+def test_get_spark_boots_the_daemon_unasked(boot_probe):
+    """With no action after ``get_spark`` returns, the daemon appears
+    below the driver with pandas and pyarrow loaded."""
+    assert boot_probe["daemon"] is not None, boot_probe
+    _assert_preloaded(boot_probe["daemon"])
+
+
+def test_pool_boot_is_one_job_in_its_own_group(boot_probe):
+    """The boot is job 0, in the pool's group, and no other job ran, so
+    counting the ungrouped jobs a call runs stays exact."""
+    assert boot_probe["first"] == {"group": [0], "ungrouped": [],
+                                   "second_job": False}, boot_probe
+
+
+def test_second_get_spark_starts_no_boot(boot_probe):
+    assert boot_probe["again"] == boot_probe["first"], boot_probe
+
+
+def test_stop_right_after_get_spark_is_quiet():
+    """Stopping the session while the boot job may still run ends the
+    process cleanly: the boot thread returns quietly on a stopped
+    context."""
+    probe = _probe("from mapreduce_rust_spark.session import get_spark\n"
+                   "get_spark('pool-boot-stop').stop()\n")
+    _, err = probe.communicate(timeout=300)
+    assert probe.returncode == 0, err[-3000:]
+    assert "Exception in thread" not in err, err[-3000:]
