@@ -16,6 +16,11 @@ that runs an Arrow task (``mapInPandas``, pandas UDFs,
 ``applyInPandas*``) inherits them instead of importing them itself,
 about 0.35 s of CPU per fresh worker. ``get_spark`` gives RDD and SQL
 runners one worker env, so this one daemon serves every Python task.
+
+The daemon boots when ``get_spark`` creates the SparkContext, not when
+the first Python task arrives: ``get_spark`` runs a one-task job on a
+background thread (job group ``mapreduce_rust_spark.worker_pool``), so
+the import above overlaps the JVM's first SQL plan.
 """
 
 from __future__ import annotations

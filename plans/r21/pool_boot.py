@@ -3,7 +3,6 @@ costs before and after ``get_spark`` started booting it on its own.
 
     python3 plans/r21/pool_boot.py one <checkout root> split|warmup
     python3 plans/r21/pool_boot.py compare <parent root> <change root> <runs>
-    python3 plans/r21/pool_boot.py pairs <parent root> <change root> <workload> <seed>...
 
 ``one`` runs one cold session of the checkout on
 ``local[$SPARK_GRAFT_CPUS]`` and prints one JSON line:
@@ -23,8 +22,8 @@ costs before and after ``get_spark`` started booting it on its own.
 
 ``compare`` alternates ``runs`` cold runs of each kind between the two
 checkouts, parent first on even runs, and prints every run and the
-medians. ``pairs`` prints perfbench ``--trace 0`` pairs
-(``plans/r20/worker_pool.py pairs``).
+medians. The perfbench pairs in ``pool_boot.txt`` are printed by
+``plans/r20/worker_pool.py pairs``.
 """
 import json
 import os
@@ -121,10 +120,5 @@ def compare(parent: str, change: str, runs: str) -> None:
                   f"{[round(x, 2) for x in p]} -> {[round(x, 2) for x in c]}")
 
 
-def pairs(*args: str) -> None:
-    from worker_pool import pairs as worker_pool_pairs
-    worker_pool_pairs(*args)
-
-
 if __name__ == "__main__":
-    {"one": one, "compare": compare, "pairs": pairs}[sys.argv[1]](*sys.argv[2:])
+    {"one": one, "compare": compare}[sys.argv[1]](*sys.argv[2:])

@@ -21,7 +21,8 @@ from pyspark.sql import SparkSession
 
 from mapreduce_rust_spark.core.pyworker import invalidate_caches
 from mapreduce_rust_spark.session import (_PACKAGE_ROOT, _TRACEBACK,
-                                          _WORKER_PATH, _with_worker_daemon)
+                                          _WORKER_PATH, _with_worker_daemon,
+                                          get_spark)
 
 DAEMON = "mapreduce_rust_spark.core.pyworker"
 POOL_GROUP = "mapreduce_rust_spark.worker_pool"
@@ -101,6 +102,18 @@ def test_get_spark_forks_workers_from_the_daemon(spark):
     assert held[_WORKER_PATH] == os.pathsep.join(["extra-libs", _PACKAGE_ROOT])
 
 
+def test_logger_demotion_failure_warns_and_keeps_the_session(spark, monkeypatch):
+    """``get_spark`` never fails on demoting the WindowExec logger, and
+    says why it could not."""
+    class _Gone:
+        def __getattr__(self, name):
+            raise RuntimeError("gateway gone")
+
+    monkeypatch.setattr(spark.sparkContext, "_jvm", _Gone())
+    with pytest.warns(RuntimeWarning, match="gateway gone"):
+        assert get_spark() is spark
+
+
 def test_python_tasks_share_one_preloaded_daemon(spark):
     """An RDD task, a ``mapInPandas`` task and a pandas UDF task all
     fork from one daemon, and that daemon has pandas and pyarrow loaded,
@@ -131,11 +144,10 @@ def test_python_tasks_share_one_preloaded_daemon(spark):
 
 # A fresh ``get_spark`` session in its own process (the ``spark``
 # fixture's daemon already exists). It takes no action of its own: it
-# waits up to 60 s for the daemon to appear below it with pandas and
-# pyarrow mapped and for a boot job to finish, reads the status tracker,
-# calls ``get_spark()`` again and reads it once more. It prints one JSON
-# line and keeps the session, and so the daemon, alive until its stdin
-# closes.
+# waits up to 60 s for a job in the pool's group to finish, reads the
+# status tracker, finds the daemon below it, calls ``get_spark()`` again
+# and reads the tracker once more. It prints one JSON line and keeps the
+# session, and so the daemon, alive until its stdin closes.
 _BOOT_PROBE = textwrap.dedent("""
     import json, os, sys, time
     from mapreduce_rust_spark.session import get_spark
@@ -171,25 +183,14 @@ _BOOT_PROBE = textwrap.dedent("""
         return next((p for p in sorted(below)
                      if runs_daemon(p) and not runs_daemon(parent[p])), None)
 
-    def preloaded(pid):
-        try:
-            with open(f"/proc/{pid}/maps") as f:
-                maps = f.read()
-        except OSError:
-            return False
-        return "libarrow" in maps and "pandas" + os.sep + "_libs" in maps
-
     spark = get_spark("pool-boot-probe")
     tracker = spark.sparkContext.statusTracker()
-    deadline, pid = time.time() + 60, None
-    while time.time() < deadline and not (pid and preloaded(pid)):
-        time.sleep(0.1)
-        pid = daemon_pid()
 
     def boot_done():
         ids = tracker.getJobIdsForGroup(group)
         return ids and tracker.getJobInfo(ids[0]).status == "SUCCEEDED"
 
+    deadline = time.time() + 60
     while time.time() < deadline and not boot_done():
         time.sleep(0.1)
 
@@ -198,7 +199,7 @@ _BOOT_PROBE = textwrap.dedent("""
                 "ungrouped": sorted(tracker.getJobIdsForGroup(None)),
                 "second_job": tracker.getJobInfo(1) is not None}
 
-    first = jobs()
+    first, pid = jobs(), daemon_pid()
     get_spark()
     time.sleep(2)
     print(json.dumps({"daemon": pid, "first": first, "again": jobs()}), flush=True)
@@ -208,9 +209,8 @@ _BOOT_PROBE = textwrap.dedent("""
 
 
 def _probe(code: str, *args: str) -> subprocess.Popen:
-    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g",
-               PYTHONPATH=os.pathsep.join(
-                   p for p in (str(REPO_ROOT), os.environ.get("PYTHONPATH")) if p))
+    # ``-c`` puts the working directory, the repo root, on ``sys.path``
+    env = dict(os.environ, SPARK_GRAFT_CPUS="2", SPARK_GRAFT_DRIVER_MEM="1g")
     return subprocess.Popen([sys.executable, "-c", code, *args], cwd=REPO_ROOT,
                             env=env, stdin=subprocess.PIPE,
                             stdout=subprocess.PIPE, stderr=subprocess.PIPE,
