@@ -24,9 +24,21 @@ Everything is DataFrame-first so Catalyst supplies pushdown, pruning,
 partial aggregation, AQE and whole-stage codegen.
 """
 
+import sys
+
+from pyspark import cloudpickle
+
 from mapreduce_rust_spark.core import run_job, run_job_df
 from mapreduce_rust_spark.session import get_spark
 from mapreduce_rust_spark.tables import load_table, register_views
+
+# Pickle this package BY VALUE in every closure shipped to Python
+# workers (map/reduce functions, kernels, UDFs), so workers without it
+# on their path (a harness loading ``__spark_entry__.py`` by file path)
+# still run them. Every path into a kernel imports the package first;
+# on a real cluster a pip install or ``sc.addPyFile`` is the durable
+# route.
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
 
 __all__ = ["get_spark", "load_table", "register_views",
            "run_job", "run_job_df"]

@@ -51,19 +51,6 @@ KV_SCHEMA = T.StructType([
 ])
 
 
-def _ensure_self_shipping() -> None:
-    """Pickle this package BY VALUE so user jobs run on Python workers
-    that don't have the engine on their import path (e.g. when the
-    harness imports ``__spark_entry__.py`` by file path). Module-level
-    functions are otherwise pickled by reference and the worker-side
-    import fails. On a real cluster a pip install or ``sc.addPyFile``
-    is the durable route; this makes local/embedded use just work.
-    """
-    import mapreduce_rust_spark
-    from pyspark import cloudpickle
-    cloudpickle.register_pickle_by_value(mapreduce_rust_spark)
-
-
 def _group_runner(reduce_fn: ReduceFn) -> Callable[[Iterator[tuple[str, str]]], Iterator[tuple[str, str]]]:
     """Single streaming pass over a key-sorted partition, calling
     ``reduce_fn`` once per key group — the reference's reduce loop
@@ -118,7 +105,6 @@ def run_job(
     difference between shuffling one record per occurrence and one
     record per (partition, key).
     """
-    _ensure_self_shipping()
     sc = spark.sparkContext
     rdd = splits if hasattr(splits, "flatMap") else sc.parallelize(list(splits))
     mapped = rdd.flatMap(map_fn)
@@ -154,7 +140,6 @@ def run_job_secondary_sort(
     happens IN the shuffle machinery (spill-capable), not by
     buffering a group's values in memory. At 100 TB this is the only
     way to give a reducer a giant key's values in order."""
-    _ensure_self_shipping()
     sc = spark.sparkContext
     rdd = splits if hasattr(splits, "flatMap") else sc.parallelize(list(splits))
     skf = sort_key_fn if sort_key_fn is not None else (lambda v: v)

@@ -50,7 +50,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from mapreduce_rust_spark.core.runner import _ensure_self_shipping
 from mapreduce_rust_spark.functions.text import WS_RE
 from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import _local_rows
@@ -194,7 +193,6 @@ def bpe_train(words: DataFrame, n_merges: int) -> list[tuple]:
 
 
 def _train(words: DataFrame, n_merges: int) -> list[tuple]:
-    _ensure_self_shipping()
     # single-symbol words hold no pair and never change: they stay out
     # of the one task (Spark's length counts code points)
     rows = (words.filter(F.length("w") >= 2)
@@ -257,7 +255,6 @@ def bpe_encode_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     end; the encode is additionally pinned against a pure-Python
     greedy-merge reference in tests/test_graph_bpe.py."""
     from mapreduce_rust_spark.tables import load_table
-    _ensure_self_shipping()
     merges = bpe_train(_word_freqs(spark, sf_dir), N_MERGES)
     docs = load_table(spark, sf_dir, "documents")
     schema = T.StructType([docs.schema["doc_id"],

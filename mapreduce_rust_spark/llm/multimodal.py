@@ -28,8 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.tables import load_table
-# module-level (NOT inside kernel bodies): _ensure_self_shipping pickles
-# the package by value, so kernels reference these as shipped globals
+# module-level (NOT inside kernel bodies): the package pickles by value
+# (its __init__), so kernels reference these as shipped globals
 from mapreduce_rust_spark.llm.imagecodec import decode_png, encode_png
 from mapreduce_rust_spark.llm.jpegcodec import (
     QUANT_FLAT, decode_jpeg_color, decode_jpeg_gray, encode_jpeg_color,
@@ -109,8 +109,6 @@ def _feature_batches(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
 def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary-column feature extraction end-to-end: fabricate payload →
     mapInPandas decode-stub → typed feature columns."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()  # _feature_batches must pickle by value
     docs = load_table(spark, sf_dir, "documents")
     return with_payload(docs).mapInPandas(_feature_batches, FEATURE_SCHEMA)
 
@@ -164,8 +162,6 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixed-size frames, keep every ``FRAME_STRIDE``-th — the
     video/audio subsampling stage of a multimodal pipeline, with the
     decode stubbed exactly like ``multimodal_features``."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents")
     return with_payload(docs).mapInPandas(_frame_sample_batches, FRAME_SCHEMA)
 
@@ -233,8 +229,6 @@ def multimodal_audio_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Windowed audio energy / silence detection over binary payloads
     (decode stubbed as byte-amplitudes; integer energies keep the
     DuckDB oracle exact)."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents")
     return with_payload(docs).mapInPandas(_audio_energy_batches, AUDIO_SCHEMA)
 
@@ -339,8 +333,6 @@ def multimodal_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
     sample-rate-reduction stage of a multimodal pipeline, decode
     stubbed like the ops above. Deterministic stride-downsampling
     keeps the DuckDB oracle exact (ASCII fixture: char == byte)."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents")
     return with_payload(docs).mapInPandas(_resize_batches, RESIZE_SCHEMA)
 
@@ -414,8 +406,6 @@ def multimodal_png_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept (character slicing == byte slicing, guarded on BOTH engines)
     so the oracle's VARCHAR substring/sha256 mirrors the byte-level
     kernel exactly."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") == F.octet_length(F.col("text")))
     return with_payload(docs).mapInPandas(
@@ -495,8 +485,6 @@ def jpeg_gray_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     measured ×20-replica slope 0.93× → join-bound) and results join
     back to doc ids on the prefix. Kernel work is Arrow-batched,
     shuffle carries 64-byte keys, never pixels."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         (F.length("text") == F.octet_length(F.col("text")))
         & (F.length("text") >= JPEG_BLOCKS_SIDE * JPEG_BLOCKS_SIDE))
@@ -592,8 +580,6 @@ def jpeg_color_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``jpeg_gray_roundtrip``: the kernel runs once per DISTINCT
     16-byte prefix and results join back on it; shuffle carries
     16-byte keys, never pixels."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     n = JPEG_MCU_SIDE * JPEG_MCU_SIDE
     docs = load_table(spark, sf_dir, "documents").where(
         (F.length("text") == F.octet_length(F.col("text")))
@@ -693,8 +679,6 @@ def rasterize_glyph_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines). Scale: the raster consumes only the 16-char
     prefix, so the kernel runs once per DISTINCT prefix (duplicate
     collapse, as in jpeg_gray_roundtrip) and joins back on it."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         (F.length("text") == F.octet_length(F.col("text")))
         & (F.length("text") >= GLYPH_CHARS))
@@ -820,8 +804,6 @@ def multimodal_video_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Freebirdgo/MapReduce_Rust, src/mr/worker.rs) has no media
     surface; this is the 100 TB training-pipeline extension mandate.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") >= 1)
     # one digest pass, materialized — it feeds the rep choice AND the
@@ -1180,8 +1162,6 @@ def multimodal_audio_adpcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Freebirdgo/MapReduce_Rust, src/mr/worker.rs) has no media
     surface; this is the 100 TB training-pipeline extension mandate.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") >= 1)
     key = (docs.select("doc_id", F.sha2("text", 256).alias("h"))
@@ -1323,8 +1303,6 @@ def multimodal_audio_pcm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Freebirdgo/MapReduce_Rust, src/mr/worker.rs) has no media
     surface; this is the 100 TB training-pipeline extension mandate.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") >= 1)
     key = (docs.select("doc_id", F.sha2("text", 256).alias("h"))
@@ -1634,8 +1612,6 @@ def multimodal_audio_ulaw_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Freebirdgo/MapReduce_Rust, src/mr/worker.rs) has no media
     surface; this is the 100 TB training-pipeline extension mandate.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") >= 1)
     key = (docs.select("doc_id", F.sha2("text", 256).alias("h"))
@@ -1764,8 +1740,6 @@ def multimodal_audio_alaw_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Freebirdgo/MapReduce_Rust, src/mr/worker.rs) has no media
     surface; this is the 100 TB training-pipeline extension mandate.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") >= 1)
     key = (docs.select("doc_id", F.sha2("text", 256).alias("h"))
@@ -1906,8 +1880,6 @@ def multimodal_audio_float_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Freebirdgo/MapReduce_Rust, src/mr/worker.rs) has no media
     surface; this is the 100 TB training-pipeline extension mandate.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     docs = load_table(spark, sf_dir, "documents").where(
         F.length("text") >= 1)
     key = (docs.select("doc_id", F.sha2("text", 256).alias("h"))

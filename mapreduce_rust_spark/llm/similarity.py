@@ -237,8 +237,6 @@ def knn_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     HOF folds — same bits, ~3x the speed; the bucketed table is
     localCheckpointed so the kernel runs ONE corpus pass even though
     the probe and candidate branches both read it."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     emb = (_emb(spark, sf_dir).select("vec_id", "e")
            .mapInPandas(_lsh_bucket_batches,
                         "vec_id long, e array<double>, bucket int")
@@ -474,8 +472,6 @@ def allknn_within_label(spark: SparkSession, sf_dir: str) -> DataFrame:
     dot are the fold-exact helpers, and argmax over ids sorted
     ascending reproduces the (sim DESC, nn_id) tie-break bit-for-bit,
     so the oracle is unchanged."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     emb = _emb(spark, sf_dir).select("vec_id", "label", "e")
     return emb.groupBy("label").applyInPandas(
         _allknn_block_kernel, "vec_id long, label int, nn_id long")
@@ -548,8 +544,6 @@ def knn_label_consensus(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load_table(spark, sf_dir, "documents").select(
         F.col("doc_id").alias("vec_id"), "lang")
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     emb = (_emb(spark, sf_dir).select("vec_id", "label", "e")
            .join(F.broadcast(docs), "vec_id"))
     # Round 12: the Σ|block|² top-k agreement runs inside one
@@ -1113,8 +1107,6 @@ def cosine_hist_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: ``(bucket, cos_lo, n_pairs)``.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     emb = _emb(spark, sf_dir)
     nrow = emb.agg(F.count("*").alias("__n"))
     mod = F.greatest(F.lit(1),
@@ -1451,8 +1443,6 @@ def lsh_bucket_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Output: ``(bucket, n_vecs, share_bp)``.
     """
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     emb = (_emb(spark, sf_dir).select("vec_id", "e")
            .mapInPandas(_lsh_bucket_batches,
                         "vec_id long, e array<double>, bucket int"))
@@ -1995,8 +1985,6 @@ def _pq_codes(sub: DataFrame) -> DataFrame:
     total order the struct-min form used. Rows of a subspace with no
     codeword (possible only on planted sub-PQ_KC corpora) drop,
     matching the old inner join."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     import numpy as np
     by_s: dict[int, list] = {}
     for r in (sub.filter(F.col("vec_id") < PQ_KC)

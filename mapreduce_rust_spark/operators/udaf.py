@@ -44,8 +44,6 @@ def _gini(pdf: pd.DataFrame) -> pd.DataFrame:
 
 
 def udaf_gini_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     orders = load_table(spark, sf_dir, "orders") \
         .withColumnRenamed("o_custkey", "c_custkey")
     cust = load_table(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment")

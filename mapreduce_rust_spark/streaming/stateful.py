@@ -22,8 +22,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from mapreduce_rust_spark.streaming.windows import (
-    _run_to_table, read_events_stream_rows)
+from mapreduce_rust_spark.streaming.windows import _run_to_table
+from mapreduce_rust_spark.tables import read_events_stream_rows
 
 OUT_SCHEMA = "user_id long, n_events long, total_value double"
 STATE_SCHEMA = "n long, v double"
@@ -44,8 +44,6 @@ def _update_user_state(key, pdfs: Iterator[pd.DataFrame],
 def stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Running per-user totals via custom state. Output: final
     cumulative row per user (max over per-batch emissions)."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = src.select("user_id", "value")
     updated = (ev.groupBy("user_id")
@@ -117,8 +115,6 @@ def stateful_session_flush(spark: SparkSession, sf_dir: str) -> DataFrame:
     max(ts) − delay, so exactly the trailing sessions older than
     that flush — which is what the oracle computes. Output is in
     exact epoch micros (no float state)."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = (src.withWatermark("ts", f"{SESS_WM_DELAY_S} seconds")
           .select("user_id", "ts", F.unix_micros("ts").alias("us")))
@@ -220,8 +216,6 @@ def stream_zscore_anomaly(spark: SparkSession, sf_dir: str) -> DataFrame:
     naturally as day keys go stale; the Python loop is the
     custom-accumulator extension point (an online sketch or decaying
     counter drops into the same harness)."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = (src.select("event_id",
                      F.col("event_type"),
@@ -273,8 +267,6 @@ def stream_ewma_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     cumulative; the final row per user is the one with the largest
     n_events (struct-max — n strictly increases). Same DuckDB oracle
     as the batch op."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
                      F.bround(F.col("value") * 100).cast("long").alias("vc")))
@@ -330,8 +322,6 @@ def stream_holt_user_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     state per key). Emissions are per-batch cumulative; final row
     per user = max n_events. Same recursive-CTE DuckDB oracle as
     the batch op."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
                      F.bround(F.col("value") * 100).cast("long").alias("vc")))
@@ -391,8 +381,6 @@ def stream_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     partials are per-batch increments (append semantics), so the
     final aggregate is a plain SUM — no struct-max dance. Same
     DuckDB oracle as the batch op."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     from pyspark.sql import Window as W
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
@@ -454,8 +442,6 @@ def stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     MACHINE with session-reset semantics). Per-batch credit
     increments sum to the final report; same DuckDB oracle as the
     batch op."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
                      "event_type"))
@@ -516,8 +502,6 @@ def stream_event_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-key state (1 bit + 2 counters — the smallest state in the
     family). Emissions are per-batch cumulative; final row per user =
     struct-max on n_events; same DuckDB oracle as the batch op."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     src, rows = read_events_stream_rows(spark, sf_dir)
     ev = (src.select("user_id", F.unix_micros("ts").alias("us"), "event_id",
                      F.substring("event_type", 1, 1).alias("tc")))
@@ -580,8 +564,6 @@ def stream_bot_gap_regularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     form picks the modal gap batch-side. Bit-identical to the batch
     op (integer seconds, deterministic mode tie-break); same DuckDB
     oracle."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
-    _ensure_self_shipping()
     from mapreduce_rust_spark.operators.monitoring import (
         bot_gap_closed_form)
     src, rows = read_events_stream_rows(spark, sf_dir)

@@ -1,8 +1,8 @@
 """Event-time streaming operators over the fixture tables.
 
-Execution model: ``readStream`` over the parquet fixture with an
-explicit schema (``ts`` arrives as raw nanos — same adapter story as
-the batch path), ``Trigger.AvailableNow`` to drain the source
+Execution model: ``tables.read_table_stream`` over the parquet
+fixture (the batch scan's schema and ``ts`` adapter),
+``Trigger.AvailableNow`` to drain the source
 deterministically, memory sink, then the materialized table is
 returned. In production the source is Kafka/files-in-motion and the
 sink is a real table — the dataflow in the middle is identical, and
@@ -42,7 +42,6 @@ from typing import Callable, NamedTuple
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.core.runner import _ensure_self_shipping
 from mapreduce_rust_spark.functions import spread
 from mapreduce_rust_spark.llm.evaluation import (
     ISOTONIC_ORACLE, calibration_bin_counts, isotonic_closed_form,
@@ -57,7 +56,6 @@ from mapreduce_rust_spark.llm.sharding import (
     SHUFFLE_QUALITY_ORACLE, shard_quality_cells, shard_quality_closed_form)
 from mapreduce_rust_spark.llm.textanalysis import (
     LEN_QUANTILES_ORACLE, len_cells, len_quantiles_closed_form)
-from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.operators.analytic import (
     GRID_MEDIAN_ORACLE, grid_median_cells, grid_median_readout)
 from mapreduce_rust_spark.operators.dataquality import (
@@ -99,53 +97,14 @@ from mapreduce_rust_spark.operators.olap import (
 from mapreduce_rust_spark.operators.relational import (
     DEC_FINE, hll_oracle_sql, hll_readout, hll_rho_select)
 from mapreduce_rust_spark.operators.temporal import INTERVAL_JOIN_ORACLE
-from mapreduce_rust_spark.tables import (
-    load_table, read_parquet_nanos_fallback, table_path)
+from mapreduce_rust_spark.tables import load_table, read_table_stream
 
 WATERMARK = "10 minutes"
 
-# Stream-source schema probes are a ``plan`` session memo: every twin
-# build batch-reads the fixture footer just to get an explicit schema
-# for readStream, and across 62 twins × reps that driver-side probe is
-# pure fixed cost. Schemas only, one per source path.
-def _probe_schema(spark: SparkSession, path: str, nanos_fallback: bool):
-    return session_memo(
-        spark, "plan", ("stream_schema", path),
-        lambda: (read_parquet_nanos_fallback(spark, path) if nanos_fallback
-                 else spark.read.parquet(path)).schema)
-
-
-def read_table_stream(spark: SparkSession, sf_dir: str,
-                      name: str) -> DataFrame:
-    """Streaming source over one fixture table (the CDC / crawler
-    landing-directory feed shape in production). A file stream needs
-    an explicit schema, so it is probed from the parquet footer —
-    an encoding change breaks loudly in one place.
-
-    ``events`` is schema-adaptive on ``ts`` exactly like the batch
-    loader (``tables.load_table``): branch on the encoding era —
-    INT64-nanos loads as long and converts; ``timestamp[us]`` passes
-    through with an NTZ→local normalize. Hard-coding either era reads
-    the other era's raw int64 as the wrong unit (silently, off by
-    10^3). The other tables have kept one encoding across eras."""
-    path = table_path(sf_dir, name)
-    is_events = name == "events"
-    src_schema = _probe_schema(spark, path, nanos_fallback=is_events)
-    raw = spark.readStream.schema(src_schema).parquet(
-        _stream_glob(sf_dir, name))
-    if is_events:
-        ts_type = dict(raw.dtypes).get("ts")
-        if ts_type == "bigint":
-            raw = raw.withColumn(
-                "ts", F.expr("timestamp_micros(ts DIV 1000)"))
-        elif ts_type == "timestamp_ntz":
-            raw = raw.withColumn("ts", F.col("ts").cast("timestamp"))
-    return raw
-
 
 def read_events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming source over the events fixture (``read_table_stream``
-    with the ``ts`` encoding adapter)."""
+    """Streaming source over the events fixture
+    (``tables.read_table_stream``)."""
     return read_table_stream(spark, sf_dir, "events")
 
 
@@ -179,35 +138,6 @@ LAST_STREAM_STATS: dict | None = None
 #   4 on 4 cpus, 10 on 10 or more).
 # In production the count is fixed by the checkpoint at the query's
 # FIRST start and must track keyspace and throughput.
-
-
-def _stream_glob(sf_dir: str, name: str) -> str:
-    """The file-stream source path of fixture table ``name``: a file
-    stream wants a directory or glob, not a bare file, so glob to the
-    single fixture file (in production, a landing directory)."""
-    return table_path(sf_dir, name) + "*"
-
-
-def read_events_stream_rows(spark: SparkSession,
-                            sf_dir: str) -> tuple[DataFrame, int]:
-    """``read_events_stream`` and the number of rows it streams: the
-    parquet footers of the files its glob matches, summed by the
-    driver's JVM (metadata only: no Spark job, and no parquet reader
-    loaded into the Python driver). For ``_run_to_table``'s
-    ``rows``."""
-    sc = spark.sparkContext
-    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
-    parquet = jvm.org.apache.parquet.hadoop
-    pattern = jvm.org.apache.hadoop.fs.Path(_stream_glob(sf_dir, "events"))
-    rows = 0
-    for st in pattern.getFileSystem(conf).globStatus(pattern) or []:
-        reader = parquet.ParquetFileReader.open(
-            parquet.util.HadoopInputFile.fromStatus(st, conf))
-        try:
-            rows += reader.getRecordCount()
-        finally:
-            reader.close()
-    return read_events_stream(spark, sf_dir), rows
 
 
 def _state_partitions(rows: int, per_batch: int, ceiling: int) -> int:
@@ -259,7 +189,7 @@ def _run_to_table(df: DataFrame, name: str, mode: str,
     micro-batch; a vanilla session's 200 is pathological for the
     fixture (and for any small topic). Bind 1 for a JVM-state drain,
     or for an applyInPandasWithState drain of ``rows`` source rows
-    (``read_events_stream_rows``) one per Arrow batch
+    (``tables.read_events_stream_rows``) one per Arrow batch
     (``_state_partitions``), for the stream's lifetime, and restore
     the caller's count afterwards — streaming queries bind confs at
     start, so this can't leak into the caller's queries.
@@ -537,7 +467,6 @@ def _decode_cells(kernel, schema) -> Callable[[DataFrame], DataFrame]:
     """A stateless append-mode ingest transform: an Arrow-batched
     audio decode kernel applied per micro-batch."""
     def cells(docs: DataFrame) -> DataFrame:
-        _ensure_self_shipping()
         docs = docs.where(F.length("text") >= 1)
         # round 12: the file-stream source is one partition (single-
         # row-group fixture), so the decode kernel ran serially inside

@@ -3,15 +3,20 @@
 The reference reads whole text files with a fixed naming scheme
 (``data/gut-{map_task_id}.txt``, worker.rs:65-77); here the source
 layer is columnar parquet so Catalyst gets predicate pushdown and
-column pruning for free. ``load_table`` is the single scan entry
-point every operator goes through.
+column pruning for free. This module is the only one that reads the
+fixture files: ``load_table`` is the batch scan every operator goes
+through and ``read_table_stream`` the stream source every twin goes
+through. Both start from one memoized raw scan per table and adapt
+the ``ts`` encoding with one function.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.memo import session_memo
 
@@ -36,22 +41,27 @@ _NANOS_AS_LONG = "spark.sql.legacy.parquet.nanosAsLong"
 
 def read_parquet_nanos_fallback(spark: SparkSession, path: str) -> DataFrame:
     """``spark.read.parquet``, retried with TIMESTAMP(NANOS) columns
-    loaded as long when schema inference rejects them. The legacy conf
-    is bound for the retry only and the caller's value — set or unset —
-    is restored: the resolved scan keeps reading nanos as long after
-    the conf is gone, so it never leaks into the caller's session."""
+    loaded as long when schema inference rejects such a column. The
+    legacy conf is bound for the retry only and the caller's value — set
+    or unset — is restored: the resolved scan keeps reading nanos as
+    long after the conf is gone, so it never leaks into the caller's
+    session. Any other error (a missing or unreadable file) is raised
+    from the one read, with the conf untouched."""
     try:
         return spark.read.parquet(path)
-    except Exception:
-        old = spark.conf.get(_NANOS_AS_LONG, None)
-        spark.conf.set(_NANOS_AS_LONG, "true")
-        try:
-            return spark.read.parquet(path)
-        finally:
-            if old is None:
-                spark.conf.unset(_NANOS_AS_LONG)
-            else:
-                spark.conf.set(_NANOS_AS_LONG, old)
+    except AnalysisException as exc:
+        if (exc.getCondition() != "PARQUET_TYPE_ILLEGAL"
+                or "TIMESTAMP(NANOS" not in str(exc)):
+            raise
+    old = spark.conf.get(_NANOS_AS_LONG, None)
+    spark.conf.set(_NANOS_AS_LONG, "true")
+    try:
+        return spark.read.parquet(path)
+    finally:
+        if old is None:
+            spark.conf.unset(_NANOS_AS_LONG)
+        else:
+            spark.conf.set(_NANOS_AS_LONG, old)
 
 
 def _local_rows(spark: SparkSession, rows, schema) -> DataFrame:
@@ -73,14 +83,9 @@ def _local_rows(spark: SparkSession, rows, schema) -> DataFrame:
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar scan of one fixture table (pushdown/pruning capable).
-
-    A real lakehouse carries mixed timestamp encodings, so the loader is
-    schema-adaptive on ``events.ts``: plain ``timestamp``/``timestamp_ntz``
-    parquet passes straight through; TIMESTAMP(NANOS) parquet (which the
-    vectorized reader rejects) is re-read as long nanos via the legacy
-    conf and converted with integer division — ns epochs ≈ 1.7e18
-    overflow double precision, so no float math on the raw value.
+    """Columnar scan of one fixture table (pushdown/pruning capable),
+    with ``ts`` adapted to the session-local ``timestamp`` type
+    (``_adapt_ts``).
 
     Repeated loads in one session return the SAME DataFrame object
     (a ``plan`` session memo keyed by ``("table", sf_dir, name)``).
@@ -93,26 +98,82 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     condition: alias each side at the join site. Another ``sf_dir`` or
     another session gets a different object.
     """
+    return _scan(spark, sf_dir, name)[1]
+
+
+def read_table_stream(spark: SparkSession, sf_dir: str,
+                      name: str) -> DataFrame:
+    """Streaming source over one fixture table (the CDC / crawler
+    landing-directory feed shape in production), with ``ts`` adapted
+    like ``load_table``'s.
+
+    A file stream needs an explicit schema: it takes the raw schema of
+    the batch scan that ``load_table`` memoizes, so building a stream
+    after a batch load of the same table runs no Spark job, and an
+    encoding change breaks loudly in one place."""
+    raw = _scan(spark, sf_dir, name)[0]
+    return _adapt_ts(spark.readStream.schema(raw.schema)
+                     .parquet(_stream_glob(sf_dir, name)))
+
+
+def read_events_stream_rows(spark: SparkSession,
+                            sf_dir: str) -> tuple[DataFrame, int]:
+    """The events stream (``read_table_stream``) and the number of rows
+    it streams: the parquet footers of the files its glob matches,
+    summed by the driver's JVM (metadata only: no Spark job, and no
+    parquet reader loaded into the Python driver). For
+    ``streaming.windows._run_to_table``'s ``rows``."""
+    sc = spark.sparkContext
+    jvm, conf = sc._jvm, sc._jsc.hadoopConfiguration()
+    parquet = jvm.org.apache.parquet.hadoop
+    pattern = jvm.org.apache.hadoop.fs.Path(_stream_glob(sf_dir, "events"))
+    rows = 0
+    for st in pattern.getFileSystem(conf).globStatus(pattern) or []:
+        reader = parquet.ParquetFileReader.open(
+            parquet.util.HadoopInputFile.fromStatus(st, conf))
+        try:
+            rows += reader.getRecordCount()
+        finally:
+            reader.close()
+    return read_table_stream(spark, sf_dir, "events"), rows
+
+
+def _stream_glob(sf_dir: str, name: str) -> str:
+    """The file-stream source path of fixture table ``name``: a file
+    stream wants a directory or glob, not a bare file, so glob to the
+    single fixture file (in production, a landing directory)."""
+    return table_path(sf_dir, name) + "*"
+
+
+def _scan(spark: SparkSession, sf_dir: str,
+          name: str) -> tuple[DataFrame, DataFrame]:
+    """``(raw, adapted)`` batch scans of one fixture table, memoized
+    per session: the raw one is read with the nanos fallback, the
+    adapted one is ``_adapt_ts`` of it."""
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; have {TABLES}")
-    return session_memo(spark, "plan", ("table", sf_dir, name),
-                        lambda: _scan_table(spark, sf_dir, name))
+
+    def build():
+        raw = read_parquet_nanos_fallback(spark, table_path(sf_dir, name))
+        return raw, _adapt_ts(raw)
+
+    return session_memo(spark, "plan", ("table", sf_dir, name), build)
 
 
-def _scan_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name != "events":
-        return spark.read.parquet(table_path(sf_dir, name))
-    from pyspark.sql import functions as F
-    path = table_path(sf_dir, name)
-    df = read_parquet_nanos_fallback(spark, path)
+def _adapt_ts(df: DataFrame) -> DataFrame:
+    """Normalize ``ts`` (the event time of ``events``) across the
+    fixture's encoding eras, batch or stream. TIMESTAMP(NANOS) parquet
+    arrives as long nanos (the fallback read) and converts by integer
+    division: ns epochs ≈ 1.7e18 overflow double precision.
+    ``timestamp[us]`` loads as TIMESTAMP_NTZ and is cast to the
+    session-local TIMESTAMP, the wall-clock instant that operators and
+    DuckDB oracles both assume. Hard-coding either era reads the
+    other's raw int64 as the wrong unit (silently, off by 10^3)."""
     ts_type = dict(df.dtypes).get("ts")
-    if ts_type == "bigint":  # nanos-era fixture: convert to micros
-        df = df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif ts_type == "timestamp_ntz":
-        # Operators and DuckDB oracles both treat ts as a wall-clock
-        # instant; normalize NTZ to the session-local TIMESTAMP type so
-        # window/interval arithmetic behaves identically across eras.
-        df = df.withColumn("ts", F.col("ts").cast("timestamp"))
+    if ts_type == "bigint":
+        return df.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
+    if ts_type == "timestamp_ntz":
+        return df.withColumn("ts", F.col("ts").cast("timestamp"))
     return df
 
 

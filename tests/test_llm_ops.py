@@ -232,17 +232,15 @@ def test_png_decode_in_map_in_pandas(spark):
     multimodal operators use: build PNG payloads, decode per batch,
     emit (doc_id, width, height, channels) — the bytes never leave
     the executor."""
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     from mapreduce_rust_spark.llm.imagecodec import decode_png, encode_png
-    _ensure_self_shipping()
     rows = [(i, encode_png(bytes((i + j) % 256 for j in range(6 * i * 3)),
                            6, i, 3)) for i in range(1, 5)]
     df = spark.createDataFrame(rows, "doc_id long, payload binary")
 
-    # decode_png is a CLOSURE reference: _ensure_self_shipping pickles
-    # the package by value, so the kernel ships with the codec — an
-    # import inside the kernel body would need the repo on the
-    # worker's sys.path (fails under the driver's by-path load)
+    # decode_png is a CLOSURE reference: the package pickles by value,
+    # so the kernel ships with the codec — an import inside the kernel
+    # body would need the repo on the worker's sys.path (fails when
+    # ``__spark_entry__.py`` is loaded by file path)
     def kernel(batches):
         import pandas as pd
         for pdf in batches:

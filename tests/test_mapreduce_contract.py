@@ -3,13 +3,17 @@ simulator, parity with the DataFrame word count, text sink framing."""
 
 from __future__ import annotations
 
+import json
+import subprocess
+import sys
 from collections import defaultdict
+from pathlib import Path
 
 import pytest
 from hypothesis import given, settings, strategies as st
 
 from mapreduce_rust_spark.core.apps import wc_map, wc_reduce
-from mapreduce_rust_spark.core.runner import _ensure_self_shipping, run_job
+from mapreduce_rust_spark.core.runner import run_job
 from tests.conftest import SF_SMOKE
 
 
@@ -22,10 +26,45 @@ def simulate(splits, map_fn, reduce_fn):
     return {k: reduce_fn(k, vs) for k, vs in groups.items()}
 
 
-def test_ensure_self_shipping_registers_the_package_by_value():
-    from pyspark import cloudpickle
-    _ensure_self_shipping()
-    assert "mapreduce_rust_spark" in cloudpickle.list_registry_pickle_by_value()
+# Pickles a map function and a reduce-side closure in an interpreter
+# that only imports the package (no engine call registers anything).
+_PICKLE_KERNELS = """
+import sys
+import mapreduce_rust_spark
+from mapreduce_rust_spark.core import apps, runner
+from pyspark import cloudpickle
+assert "mapreduce_rust_spark" in cloudpickle.list_registry_pickle_by_value()
+sys.stdout.buffer.write(cloudpickle.dumps(
+    (apps.wc_map, runner._group_runner(apps.wc_reduce))))
+"""
+
+# Loads and calls them where the package cannot be imported.
+_CALL_KERNELS = """
+import importlib.util, json, pickle, sys
+assert importlib.util.find_spec("mapreduce_rust_spark") is None
+wc_map, group = pickle.loads(sys.stdin.buffer.read())
+kvs = sorted(wc_map("the cat, the hat!"))
+print(json.dumps({"map": kvs, "reduce": list(group(iter(kvs))),
+                  "imported": "mapreduce_rust_spark" in sys.modules}))
+"""
+
+
+def test_package_import_ships_kernels_by_value(tmp_path):
+    """Importing the package registers it for by-value pickling, so a
+    worker without the repo on ``sys.path`` (``__spark_entry__.py``
+    loaded by file path) still loads and runs its kernels."""
+    repo = Path(__file__).resolve().parent.parent
+    pickled = subprocess.run([sys.executable, "-c", _PICKLE_KERNELS],
+                             cwd=repo, capture_output=True, check=True,
+                             timeout=120).stdout
+    # -I: no PYTHONPATH, no cwd or script dir on sys.path
+    out = subprocess.run([sys.executable, "-I", "-c", _CALL_KERNELS],
+                         cwd=tmp_path, input=pickled, capture_output=True,
+                         check=True, timeout=120).stdout
+    assert json.loads(out) == {
+        "map": [["cat", "1"], ["hat", "1"], ["the", "1"], ["the", "1"]],
+        "reduce": [["cat", "1"], ["hat", "1"], ["the", "2"]],
+        "imported": False}
 
 
 def test_wc_contract_matches_simulator(spark):

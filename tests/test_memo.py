@@ -133,6 +133,36 @@ def test_only_memo_module_keys_by_application():
     assert not offenders, offenders
 
 
+def _ts_conversion(node) -> bool:
+    """``timestamp_micros(ts DIV 1000)`` in a string, or a
+    ``.cast("timestamp")`` of a ``col("ts")``-style column."""
+    if isinstance(node, ast.Constant) and isinstance(node.value, str):
+        return "timestamp_micros(ts DIV 1000)" in node.value
+    return (isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "cast"
+            and [getattr(a, "value", None) for a in node.args]
+            == ["timestamp"]
+            and isinstance(node.func.value, ast.Call)
+            and [getattr(a, "value", None) for a in node.func.value.args]
+            == ["ts"])
+
+
+def test_one_module_ships_the_package_and_one_adapts_ts():
+    """Only the package ``__init__`` registers by-value pickling, and
+    only ``tables.py`` converts the fixture ``ts`` encoding."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if (rel != "__init__.py" and isinstance(node, ast.Attribute)
+                    and node.attr == "register_pickle_by_value"):
+                offenders.append((rel, node.lineno, node.attr))
+            elif rel != "tables.py" and _ts_conversion(node):
+                offenders.append((rel, node.lineno, "ts conversion"))
+    assert not offenders, offenders
+
+
 def test_bpe_merges_learned_once_per_session(spark):
     """bpe_train_merges then bpe_encode_docs in one session learn the
     merge list once: one ``bpe_merges`` miss, then a hit."""

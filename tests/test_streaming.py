@@ -2,6 +2,9 @@
 
 from __future__ import annotations
 
+import os
+
+import pytest
 from pyspark.sql import functions as F
 
 from tests.conftest import SF_CORRECT, SF_SMOKE
@@ -50,9 +53,7 @@ def test_stateful_survives_multiple_microbatches(spark, tmp_path):
     from mapreduce_rust_spark.streaming.stateful import (
         OUT_SCHEMA, STATE_SCHEMA, _update_user_state)
     from pyspark.sql.streaming.state import GroupStateTimeout
-    from mapreduce_rust_spark.core.runner import _ensure_self_shipping
     from mapreduce_rust_spark.tables import load_table
-    _ensure_self_shipping()
 
     src = tmp_path / "stream_src"
     src.mkdir()
@@ -542,3 +543,67 @@ def test_nanos_era_events_leave_caller_conf_unchanged(spark, tmp_path):
     got = _collect_set(stream_tumbling_counts(spark, str(tmp_path)), cols)
     assert spark.conf.get(conf, None) is None
     assert got == _collect_set(stream_tumbling_counts(spark, SF_SMOKE), cols)
+
+
+def test_nanos_fallback_retries_only_a_nanos_rejection(
+        spark, tmp_path, monkeypatch):
+    """The nanosAsLong retry runs only when Spark rejects a
+    TIMESTAMP(NANOS) column: a missing file raises its own error from
+    one read with the conf never set, and a nanos file reads twice with
+    the conf bound for the second read only."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.errors import AnalysisException
+    from pyspark.sql.readwriter import DataFrameReader
+
+    from mapreduce_rust_spark.tables import read_parquet_nanos_fallback
+    conf = "spark.sql.legacy.parquet.nanosAsLong"
+    assert spark.conf.get(conf, None) is None
+    reads, real = [], DataFrameReader.parquet
+
+    def counting(self, *paths, **options):
+        reads.append(spark.conf.get(conf, None))
+        return real(self, *paths, **options)
+
+    monkeypatch.setattr(DataFrameReader, "parquet", counting)
+    with pytest.raises(AnalysisException) as err:
+        read_parquet_nanos_fallback(spark, str(tmp_path / "missing.parquet"))
+    assert err.value.getCondition() == "PATH_NOT_FOUND"
+    assert reads == [None]
+    assert spark.conf.get(conf, None) is None
+
+    reads.clear()
+    nanos = str(tmp_path / "nanos.parquet")
+    pq.write_table(pa.table({"ts": pa.array([1], pa.timestamp("ns"))}),
+                   nanos, version="2.6")
+    assert dict(read_parquet_nanos_fallback(spark, nanos).dtypes) == {
+        "ts": "bigint"}
+    assert reads == [None, "true"]
+    assert spark.conf.get(conf, None) is None
+
+
+@pytest.mark.parametrize("name", ["events", "orders"])
+def test_stream_source_reuses_the_batch_scan(spark, tmp_path, name):
+    """After ``load_table``, building ``read_table_stream`` over the
+    same table runs no Spark job: the stream's source schema is the
+    memoized raw batch scan's. A fresh sf_dir makes the batch load the
+    session's first, which does run the parquet schema job."""
+    import json
+
+    from pyspark.sql.types import StructType
+
+    from mapreduce_rust_spark.tables import (
+        load_table, read_table_stream, table_path)
+    from tests.test_plans import _jobs_during
+    sf_dir, path = str(tmp_path), table_path(str(tmp_path), name)
+    os.symlink(table_path(SF_SMOKE, name), path)
+    batch, load_jobs = _jobs_during(
+        spark, lambda: load_table(spark, sf_dir, name))
+    stream, stream_jobs = _jobs_during(
+        spark, lambda: read_table_stream(spark, sf_dir, name))
+    assert load_jobs >= 1
+    assert stream_jobs == 0
+    leaf = stream._jdf.queryExecution().analyzed().collectLeaves().head()
+    assert StructType.fromJson(json.loads(leaf.schema().json())) \
+        == spark.read.parquet(path).schema
+    assert stream.schema == batch.schema
