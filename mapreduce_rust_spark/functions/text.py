@@ -29,11 +29,6 @@ def tokens(col) -> Column:
     return F.split(F.regexp_replace(col, PUNCT_RE, ""), WS_RE)
 
 
-def token_count(col) -> Column:
-    """Number of non-empty reference-rule tokens."""
-    return F.size(F.filter(tokens(col), lambda t: t != F.lit("")))
-
-
 def whitespace_token_count(col) -> Column:
     """Cheap whitespace token count (no punctuation strip)."""
     return F.size(F.filter(F.split(col, WS_RE), lambda t: t != F.lit("")))

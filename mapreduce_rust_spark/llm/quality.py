@@ -24,7 +24,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.functions.text import WS_RE
+from mapreduce_rust_spark.functions.text import WS_RE, whitespace_token_count
 from mapreduce_rust_spark.tables import load_table
 
 CONTAM_W = 5        # contamination n-gram width
@@ -1362,8 +1362,7 @@ def kish_ess_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     ess_ratio_ppm)``.
     """
     docs = load_table(spark, sf_dir, "documents")
-    w = F.size(F.filter(F.split("text", r"\s+"),
-                        lambda t: t != F.lit("")))
+    w = whitespace_token_count("text")
     d = (docs.select("source", w.cast("long").alias("w"))
          .where(F.col("w") > 0))
     a = d.groupBy("source").agg(

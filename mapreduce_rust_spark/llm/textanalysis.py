@@ -12,7 +12,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.functions.text import PUNCT_RE, WS_RE, fingerprint, normalized
+from mapreduce_rust_spark.functions.text import (
+    PUNCT_RE, WS_RE, fingerprint, normalized, whitespace_token_count)
 from mapreduce_rust_spark.tables import load_table
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
@@ -167,8 +168,7 @@ def token_count_bpe_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     pat = r" ?[A-Za-z]+| ?[0-9]+| ?[^A-Za-z0-9\s]+"
     bpe = F.size(F.regexp_extract_all("text", F.lit(pat), F.lit(0))).cast("long")
-    ws = F.size(F.filter(F.split("text", WS_RE), lambda t: t != F.lit("")))\
-        .cast("long")
+    ws = whitespace_token_count("text").cast("long")
     return docs.select(
         "doc_id", bpe.alias("n_bpe_tokens"), ws.alias("n_ws_tokens"),
         (bpe.cast("double") / ws).alias("fertility"))

@@ -15,8 +15,12 @@ so the wedge set is O(m^1.5) worst-case instead of Σdeg² — the
 difference between a star-node (one celebrity part in every order)
 producing C(deg,2) ≈ 10¹⁰ wedges and the same node producing none.
 Each triangle is generated exactly once, by its lowest-(degree, id)
-corner. Three shuffles total: edge dedup, the wedge self-join, the
-closure join.
+corner. One kernel, ``_triangle_corners``, lists the triangles for
+every query of the family, on one of two size-gated physical paths:
+below ``BROADCAST_EDGE_LIMIT`` an in-row intersect of broadcast
+out-adjacency arrays (no wedge rows, no closure shuffle); at an unknown
+or larger size the wedge self-join and the closure join, both
+shuffled.
 """
 
 from __future__ import annotations
@@ -24,6 +28,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.functions import spread
 from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import load_table
 
@@ -73,7 +78,6 @@ def copurchase_edges(li: DataFrame) -> DataFrame:
     # round 12: the basket aggregate lands AQE-coalesced (KB of
     # arrays), serializing the quadratic in-row pair HOF — spread it
     # across the cluster first (functions.spread)
-    from mapreduce_rust_spark.functions import spread
     return (spread(arrs, "o")
                 .select(F.explode(_ordered_pairs(F.col("ps"))).alias("e"))
                 .select("e.u", "e.v")
@@ -172,9 +176,9 @@ def _orient(edges: DataFrame) -> DataFrame:
     """Degree-orient distinct (u < v) edges: src = endpoint with the
     smaller (degree, id) — a total order, so orientation is acyclic
     and out-degrees are O(√m) (module docstring). Materialized
-    (localCheckpoint): every caller reads it from ≥2 plan branches,
-    and without materialization Catalyst re-executes the degree join
-    once per alias."""
+    (localCheckpoint): the listing kernel reads it from ≥2 plan
+    branches, and without materialization Catalyst re-executes the
+    degree join once per alias."""
     deg = (edges.select(F.col("u").alias("n"))
            .unionAll(edges.select(F.col("v").alias("n")))
            .groupBy("n").agg(F.count("*").alias("d")))
@@ -195,23 +199,25 @@ def _orient(edges: DataFrame) -> DataFrame:
             .localCheckpoint(eager=True))
 
 
-def triangle_count(edges: DataFrame,
-                   n_edges: int | None = None) -> DataFrame:
-    """Global triangle count of an undirected graph given as distinct
-    (u < v) edges, via degree orientation (module docstring).
+def _triangle_corners(edges: DataFrame, n_edges: int | None) -> DataFrame:
+    """The triangle-listing kernel: one row (s, a, b) per triangle of
+    distinct (u < v) edges, via degree orientation (module docstring)
+    — s the orientation-lowest corner, a < b the other two by id, each
+    triangle exactly once.
 
     The closure probe (wedges ⋈ edges) is the one join whose LEFT side
     is O(m^1.5): when the edge list itself is small enough
     (``n_edges`` < BROADCAST_EDGE_LIMIT, pass the known count to
-    enable), broadcast it so the wedge set never shuffles — the same
-    size-gated choice the near-dup clustering makes between
-    driver-side union-find and distributed pointer jumping. Above the
-    gate (a 100 TB graph), both sides shuffle-join on (a, b)."""
+    enable), broadcast its out-adjacency so the wedge set never
+    shuffles — the same size-gated choice the near-dup clustering
+    makes between driver-side union-find and distributed pointer
+    jumping. At an unknown size or above the gate (a 100 TB graph),
+    both sides shuffle-join on (a, b)."""
     oriented = _orient(edges)
     if n_edges is not None and n_edges < BROADCAST_EDGE_LIMIT:
         # FAST PATH (size-gated): edge-iterator with adjacency-set
         # intersection. A triangle a<b<c (orientation order) has
-        # oriented edges a→b, a→c, b→c and is counted exactly once,
+        # oriented edges a→b, a→c, b→c and is listed exactly once,
         # at edge a→b, as c ∈ N⁺(a) ∩ N⁺(b). The out-adjacency table
         # is ≤ n rows of O(√m) arrays — below the gate it BROADCASTS
         # (twice), so the 1.2M-edge stream never shuffles and the
@@ -223,30 +229,47 @@ def triangle_count(edges: DataFrame,
         adj = (oriented.groupBy(F.col("s").alias("n"))
                .agg(F.array_sort(F.collect_list("t")).alias("nbrs")))
         sa, ta = adj.alias("sa"), adj.alias("ta")
-        closed = (oriented
-                  .join(F.broadcast(sa), F.col("s") == F.col("sa.n"))
-                  .join(F.broadcast(ta), F.col("t") == F.col("ta.n"),
-                        "left")
-                  .select(F.size(F.array_intersect(
-                      F.col("sa.nbrs"),
-                      # empty-array fallback typed from the data (a
-                      # hard-coded array<bigint> cast would break int
-                      # ids on this path only); sa.nbrs is never null
-                      # (inner join), so slice(...,1,0) is safe
-                      F.coalesce(F.col("ta.nbrs"),
-                                 F.slice(F.col("sa.nbrs"), 1, 0))))
-                      .alias("n_tri")))
-        return closed.agg(F.sum("n_tri").cast("long").alias("n_triangles"))
-    # ABOVE the gate (a 100 TB graph): materialized wedge join — both
-    # sides shuffle on (a, b); adjacency arrays would exceed broadcast.
+        # the oriented table lands AQE-coalesced in one partition, so
+        # the O(m^1.5) intersect would run as one task: spread it over
+        # every slot (functions.spread). Warm sf0.1 build on 4 cpus:
+        # 6.7 → 4.4 s (plans/r23/triangle_family.txt)
+        return (spread(oriented, "s")
+                .join(F.broadcast(sa), F.col("s") == F.col("sa.n"))
+                .join(F.broadcast(ta), F.col("t") == F.col("ta.n"), "left")
+                .select(F.col("s"), F.col("t").alias("x"),
+                        F.explode(F.array_intersect(
+                            F.col("sa.nbrs"),
+                            # empty-array fallback typed from the data
+                            # (a hard-coded array<bigint> cast would
+                            # break int ids on this path only); sa.nbrs
+                            # is never null (inner join), so
+                            # slice(...,1,0) is safe
+                            F.coalesce(F.col("ta.nbrs"),
+                                       F.slice(F.col("sa.nbrs"), 1, 0))))
+                         .alias("y"))
+                .select("s", F.least("x", "y").alias("a"),
+                        F.greatest("x", "y").alias("b")))
+    # ABOVE the gate (a 100 TB graph) or of unknown size: materialized
+    # wedge join — both sides shuffle on (a, b); adjacency arrays
+    # would exceed broadcast.
     w1, w2 = oriented.alias("w1"), oriented.alias("w2")
     # wedges from each source's out-neighborhood; t1 < t2 canonicalizes
     wedges = (w1.join(w2, (F.col("w1.s") == F.col("w2.s"))
                       & (F.col("w1.t") < F.col("w2.t")))
-                .select(F.col("w1.t").alias("a"), F.col("w2.t").alias("b")))
-    closed = wedges.join(edges, (F.col("a") == F.col("u"))
-                         & (F.col("b") == F.col("v")))
-    return closed.agg(F.count("*").cast("long").alias("n_triangles"))
+                .select(F.col("w1.s").alias("s"),
+                        F.col("w1.t").alias("a"), F.col("w2.t").alias("b")))
+    return (wedges.join(edges, (F.col("a") == F.col("u"))
+                        & (F.col("b") == F.col("v")))
+            .select("s", "a", "b"))
+
+
+def triangle_count(edges: DataFrame,
+                   n_edges: int | None = None) -> DataFrame:
+    """Global triangle count of an undirected graph given as distinct
+    (u < v) edges: a count over :func:`_triangle_corners` (pass the
+    known ``n_edges`` to enable its broadcast path)."""
+    return (_triangle_corners(edges, n_edges)
+            .agg(F.count("*").cast("long").alias("n_triangles")))
 
 
 def triangle_count_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -421,41 +444,6 @@ FROM deg GROUP BY degree
 """
 
 
-def triangle_corners(edges: DataFrame,
-                     n_edges: int | None = None) -> DataFrame:
-    """One row per (triangle, corner node) — column ``n`` — for
-    distinct (u < v) edges. Per-node twin of :func:`triangle_count`:
-    the same degree orientation and the same size gate, but instead
-    of counting closures it EMITS each triangle's three corners
-    (below the gate the third corner comes from exploding the
-    adjacency intersection; above it, from the wedge-closure join).
-    Every triangle yields exactly 3 rows, once each."""
-    oriented = _orient(edges)
-    if n_edges is not None and n_edges < BROADCAST_EDGE_LIMIT:
-        adj = (oriented.groupBy(F.col("s").alias("n"))
-               .agg(F.array_sort(F.collect_list("t")).alias("nbrs")))
-        sa, ta = adj.alias("sa"), adj.alias("ta")
-        tri = (oriented
-               .join(F.broadcast(sa), F.col("s") == F.col("sa.n"))
-               .join(F.broadcast(ta), F.col("t") == F.col("ta.n"))
-               .select("s", "t",
-                       F.explode(F.array_intersect(
-                           F.col("sa.nbrs"), F.col("ta.nbrs")))
-                        .alias("c")))
-    else:
-        w1, w2 = oriented.alias("w1"), oriented.alias("w2")
-        wedges = (w1.join(w2, (F.col("w1.s") == F.col("w2.s"))
-                          & (F.col("w1.t") < F.col("w2.t")))
-                    .select(F.col("w1.s").alias("s"),
-                            F.col("w1.t").alias("a"),
-                            F.col("w2.t").alias("b")))
-        tri = (wedges.join(edges, (F.col("a") == F.col("u"))
-                           & (F.col("b") == F.col("v")))
-                     .select("s", F.col("a").alias("t"),
-                             F.col("b").alias("c")))
-    return tri.select(F.explode(F.array("s", "t", "c")).alias("n"))
-
-
 def clustering_coeff_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Local clustering coefficient per part in the co-purchase
     graph: lcc(n) = 2·tri(n) / (deg(n)·(deg(n)−1)) — what fraction of
@@ -464,9 +452,10 @@ def clustering_coeff_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Strogatz); nodes with deg < 2 have no defined coefficient and are
     excluded (the oracle applies the same predicate).
 
-    Scale: corner emission inherits triangle_count's degree-oriented
-    O(m^1.5) bound and broadcast gate; the corner aggregate is a
-    partial-combinable count on node id. lcc is one IEEE division of
+    Scale: corner emission inherits the listing kernel's
+    (``_triangle_corners``) degree-oriented O(m^1.5) bound and
+    broadcast gate; the corner aggregate is a partial-combinable
+    count on node id. lcc is one IEEE division of
     two exact BIGINTs — both engines divide the identical integers,
     so the doubles are bit-equal.
     """
@@ -1211,38 +1200,6 @@ REGISTRATIONS.append(("component_stats_parts", component_stats_parts,
 KTRUSS_K = 4   # report how many edges survive support >= K-2
 
 
-def _triangle_corners(edges: DataFrame, n_edges: int) -> DataFrame:
-    """One row (s, a, b) per triangle — s the orientation-lowest
-    corner, a < b the other two by id (each triangle exactly once).
-    Size-gated exactly like ``triangle_count``: below the broadcast
-    gate the out-adjacency intersect runs in-row and only TRUE
-    triangles materialize; above it, the O(m^1.5) wedge join."""
-    oriented = _orient(edges)
-    if n_edges < BROADCAST_EDGE_LIMIT:
-        adj = (oriented.groupBy(F.col("s").alias("n"))
-               .agg(F.array_sort(F.collect_list("t")).alias("nbrs")))
-        sa, ta = adj.alias("sa"), adj.alias("ta")
-        return (oriented
-                .join(F.broadcast(sa), F.col("s") == F.col("sa.n"))
-                .join(F.broadcast(ta), F.col("t") == F.col("ta.n"), "left")
-                .select(F.col("s"), F.col("t").alias("x"),
-                        F.explode(F.array_intersect(
-                            F.col("sa.nbrs"),
-                            F.coalesce(F.col("ta.nbrs"),
-                                       F.slice(F.col("sa.nbrs"), 1, 0))))
-                         .alias("y"))
-                .select("s", F.least("x", "y").alias("a"),
-                        F.greatest("x", "y").alias("b")))
-    w1, w2 = oriented.alias("w1"), oriented.alias("w2")
-    wedges = (w1.join(w2, (F.col("w1.s") == F.col("w2.s"))
-                      & (F.col("w1.t") < F.col("w2.t")))
-                .select(F.col("w1.s").alias("s"),
-                        F.col("w1.t").alias("a"), F.col("w2.t").alias("b")))
-    return (wedges.join(edges, (F.col("a") == F.col("u"))
-                        & (F.col("b") == F.col("v")))
-            .select("s", "a", "b"))
-
-
 # The per-triangle (s, a, b) table is a ``result`` session memo: three
 # registered queries (triangle_count_copurchase, clustering_coeff_parts,
 # edge_support_hist_parts) and the k-truss peel each need the triangle
@@ -1252,9 +1209,9 @@ def _triangle_corners(edges: DataFrame, n_edges: int) -> DataFrame:
 # per triangle — bounded by the capped-basket triangle count.
 def triangle_table_cached(edges: DataFrame, n_edges: int) -> DataFrame:
     """Materialized (s, a, b) triangle table of the given distinct
-    (u < v) edge list, built once per (application, edge plan). The
-    standalone :func:`triangle_count` / :func:`triangle_corners`
-    remain the un-memoized forms for arbitrary graphs."""
+    (u < v) edge list — the :func:`_triangle_corners` listing, built
+    once per (application, edge plan). :func:`triangle_count` is the
+    un-memoized count for arbitrary graphs."""
     return session_memo(
         edges.sparkSession, "result", ("triangles", edges.semanticHash()),
         lambda: _triangle_corners(edges, n_edges).localCheckpoint(eager=True))
@@ -1360,9 +1317,9 @@ def ktruss_edges_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: round 1 reads the session-memoized triangle table (shared
     with the count / clustering-coefficient / support-histogram
-    queries); later rounds re-run the size-gated corner machinery on
-    the SHRUNKEN survivor set (monotone: each round's input is a
-    subset of the last). Inherits ``COPURCHASE_MAX_BASKET``; lineage
+    queries); later rounds filter that table down to the SHRUNKEN
+    survivor set (monotone: each round's input is a subset of the
+    last) — see :func:`ktruss_peel`. Inherits ``COPURCHASE_MAX_BASKET``; lineage
     truncated per round.
 
     Output: ``(u, v, support, truss_k)`` — surviving edges with the
@@ -1389,15 +1346,21 @@ def edge_support_table_cached(edges: DataFrame, n_edges: int) -> DataFrame:
         lambda: _edge_support(edges, triangle_table_cached(edges, n_edges)))
 
 
-def _edge_support(edges: DataFrame, tri: DataFrame) -> DataFrame:
-    epairs = tri.select(F.explode(F.array(
+def _triangle_edges(tri: DataFrame) -> DataFrame:
+    """The three (u < v) edges of every (s, a, b) triangle row: three
+    rows per triangle."""
+    return tri.select(F.explode(F.array(
         F.struct(F.least("s", "a").alias("u"),
                  F.greatest("s", "a").alias("v")),
         F.struct(F.least("s", "b").alias("u"),
                  F.greatest("s", "b").alias("v")),
         F.struct(F.col("a").alias("u"), F.col("b").alias("v"))))
         .alias("e")).select("e.u", "e.v")
-    sup = epairs.groupBy("u", "v").agg(F.count("*").alias("supp"))
+
+
+def _edge_support(edges: DataFrame, tri: DataFrame) -> DataFrame:
+    sup = (_triangle_edges(tri)
+           .groupBy("u", "v").agg(F.count("*").alias("supp")))
     return (edges.join(sup, ["u", "v"], "left")
             .select("u", "v",
                     F.coalesce("supp", F.lit(0)).cast("long")
@@ -1465,14 +1428,8 @@ def ktruss_peel(edges: DataFrame) -> DataFrame:
                 .localCheckpoint(eager=False))
             tri = marked.where(~F.col("rm")).select("s", "a", "b")
             removed = marked.where(F.col("rm")).select("s", "a", "b")
-            rc = (removed.select(F.explode(F.array(
-                F.struct(F.least("s", "a").alias("u"),
-                         F.greatest("s", "a").alias("v")),
-                F.struct(F.least("s", "b").alias("u"),
-                         F.greatest("s", "b").alias("v")),
-                F.struct(F.col("a").alias("u"), F.col("b").alias("v"))))
-                .alias("e")).select("e.u", "e.v")
-                .groupBy("u", "v").agg(F.count("*").alias("rm_n")))
+            rc = (_triangle_edges(removed)
+                  .groupBy("u", "v").agg(F.count("*").alias("rm_n")))
             if n_dropped < BROADCAST_EDGE_LIMIT:
                 rc = F.broadcast(rc)
             scored = (out.join(rc, ["u", "v"], "left")

@@ -163,6 +163,33 @@ def test_one_module_ships_the_package_and_one_adapts_ts():
     assert not offenders, offenders
 
 
+def test_one_triangle_listing_kernel():
+    """``graph._triangle_corners`` is the only triangle-listing kernel:
+    no other package function calls ``_orient``, and nothing else in
+    ``graph.py`` uses ``array_intersect``."""
+    offenders = []
+    for path in sorted(PACKAGE.rglob("*.py")):
+        rel = path.relative_to(PACKAGE).as_posix()
+        tree = ast.parse(path.read_text(), str(path))
+        kernel = {id(n) for f in tree.body
+                  if isinstance(f, ast.FunctionDef)
+                  and f.name == "_triangle_corners"
+                  and rel == "operators/graph.py"
+                  for n in ast.walk(f)}
+        for node in ast.walk(tree):
+            if id(node) in kernel:
+                continue
+            if (isinstance(node, ast.Call)
+                    and "_orient" in (getattr(node.func, "id", None),
+                                      getattr(node.func, "attr", None))):
+                offenders.append((rel, node.lineno, "_orient"))
+            elif (rel == "operators/graph.py"
+                  and isinstance(node, ast.Attribute)
+                  and node.attr == "array_intersect"):
+                offenders.append((rel, node.lineno, "array_intersect"))
+    assert not offenders, offenders
+
+
 def test_bpe_merges_learned_once_per_session(spark):
     """bpe_train_merges then bpe_encode_docs in one session learn the
     merge list once: one ``bpe_merges`` miss, then a hit."""

@@ -454,6 +454,22 @@ def test_kmeans_jobs_per_round_are_bounded(spark):
     assert four - two <= 2 * (6 + 1), (two, four)
 
 
+def test_triangle_table_spans_every_task_slot(spark):
+    """The triangle listing runs on every slot. The degree-oriented
+    edge table lands AQE-coalesced in one partition at sf0.01, so
+    without a spread before the adjacency intersect the O(m^1.5)
+    listing ran as one task and the table came out in 1 partition."""
+    from mapreduce_rust_spark.operators.graph import (
+        copurchase_edges_cached, triangle_table_cached)
+    from mapreduce_rust_spark.tables import load_table
+    edges = copurchase_edges_cached(
+        load_table(spark, SF_CORRECT, "lineitem"))
+    tri = triangle_table_cached(edges, edges.count())
+    slots = spark.sparkContext.defaultParallelism
+    assert tri.rdd.getNumPartitions() >= slots, (
+        tri.rdd.getNumPartitions(), slots)
+
+
 def test_evaluation_plan_shapes(spark):
     """Classifier-eval pins:
     - AUC: the DATA-carrying prefix window sub-shards on the score

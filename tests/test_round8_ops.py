@@ -184,12 +184,14 @@ def test_bot_gap_regularity_invariants(spark):
 def test_triangle_corners_both_gate_paths_agree(spark):
     """Planted graph (K4 on 1-4 plus pendant 5 and triangle 6-7-8):
     the broadcast fast path and the O(m^1.5) wedge path must emit the
-    IDENTICAL corner set, and per-edge support must match hand
-    counts. K4: every edge has support 2; pendant edge 0; the 6-7-8
-    triangle edges 1 each."""
+    IDENTICAL corner set, ``triangle_count`` must count 5 on both
+    paths (an unknown size takes the wedge path), and per-edge support
+    must match hand counts. K4: every edge has support 2; pendant
+    edge 0; the 6-7-8 triangle edges 1 each."""
     import pandas as pd
 
-    from mapreduce_rust_spark.operators.graph import _triangle_corners
+    from mapreduce_rust_spark.operators.graph import (
+        _triangle_corners, triangle_count)
 
     e = [(1, 2), (1, 3), (1, 4), (2, 3), (2, 4), (3, 4),
          (4, 5), (6, 7), (6, 8), (7, 8)]
@@ -200,6 +202,8 @@ def test_triangle_corners_both_gate_paths_agree(spark):
             _triangle_corners(edges, n_edges=10**9).collect()}
     assert fast == slow
     assert len(fast) == 5  # C(4,3) = 4 triangles in K4 + one in 6-7-8
+    for n_edges in (None, 10):
+        assert triangle_count(edges, n_edges).first()["n_triangles"] == 5
     support = {}
     for s, a, b in fast:
         for x, y in ((min(s, a), max(s, a)), (min(s, b), max(s, b)),
