@@ -25,6 +25,12 @@ same code scales to a multi-executor cluster at ~100 TB:
   background thread, under its own job group, so the daemon's import
   of pandas and pyarrow overlaps the driver's first SQL plan instead
   of following it when the first Python task arrives.
+- A call that launches the gateway JVM maps Spark's classes from a
+  class-data-sharing archive (``cds.py``) instead of loading and
+  verifying them from the jars: about 17.5k classes, a third off the
+  JVM's cold start. The first session on a machine builds the archive
+  into the user's cache when its interpreter exits (about 30 s, once).
+  A missing or rejected archive never fails a session.
 """
 
 from __future__ import annotations
@@ -35,6 +41,8 @@ import warnings
 
 from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+from mapreduce_rust_spark import cds
 
 _PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 _WORKER_PATH = "spark.executorEnv.PYTHONPATH"
@@ -115,10 +123,13 @@ def get_spark(app_name: str = "mapreduce_rust_spark",
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )
     creates = SparkContext._active_spark_context is None
-    spark = _with_worker_daemon(builder).getOrCreate()
+    archive = cds.for_launch(builder) if creates else None
+    with cds.conf_dir(archive):
+        spark = _with_worker_daemon(cds.with_archive(builder, archive)).getOrCreate()
     if creates:
         threading.Thread(target=_boot_worker_pool, args=(spark.sparkContext,),
                          name=_POOL_GROUP, daemon=True).start()
+    cds.check(spark, archive)
     spark.sparkContext.setLogLevel("WARN")
     # Dims-sized closed forms legitimately use empty-partition windows
     # (cum distributions over ≤ buckets rows); WindowExec warns "moving
