@@ -29,9 +29,15 @@ def tokens(col) -> Column:
     return F.split(F.regexp_replace(col, PUNCT_RE, ""), WS_RE)
 
 
+def whitespace_tokens(col) -> Column:
+    """``array<string>`` of the whitespace-split tokens, empty strings
+    dropped (no punctuation strip)."""
+    return F.filter(F.split(col, WS_RE), lambda t: t != F.lit(""))
+
+
 def whitespace_token_count(col) -> Column:
     """Cheap whitespace token count (no punctuation strip)."""
-    return F.size(F.filter(F.split(col, WS_RE), lambda t: t != F.lit("")))
+    return F.size(whitespace_tokens(col))
 
 
 def normalized(col) -> Column:

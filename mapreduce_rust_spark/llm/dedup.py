@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.functions.text import whitespace_tokens
 from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import load_table
 
@@ -545,8 +546,7 @@ def winnow_pairs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .agg(F.min("doc_id").alias("doc_id")))
     d = (docs.join(reps, "doc_id", "semi")
              .select("doc_id",
-                     F.filter(F.split("text", r"\s+"),
-                              lambda t: t != F.lit("")).alias("toks")))
+                     whitespace_tokens("text").alias("toks")))
     n = F.size("toks")
     k, w = WINNOW_K, WINNOW_W
     assert k == 3, "packed-lane gram hash below is written for k=3"

@@ -27,6 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.functions.text import whitespace_tokens
 from mapreduce_rust_spark.llm.quality import (
     quality_score_exprs,
     quality_score_from,
@@ -245,7 +246,7 @@ def retrieval_eval_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     from mapreduce_rust_spark.llm.textanalysis import (
         BM25_B, BM25_K1, SEARCH_TERMS)
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     base = docs.select("doc_id", toks.alias("toks"))
     lens = base.select("doc_id", F.size("toks").cast("long").alias("dl"))
     stats = lens.agg(F.count("*").cast("long").alias("n_docs"),

@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.functions.text import whitespace_tokens
 from mapreduce_rust_spark.llm.dedup import minhash_lsh_pairs
 from mapreduce_rust_spark.memo import session_memo
 from mapreduce_rust_spark.tables import _local_rows, load_table
@@ -58,7 +59,7 @@ def curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     Every stage is a shuffle-bounded primitive proven elsewhere; the
     composition is what a real 100 TB curation job runs nightly."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", r"\s+"), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     quality = docs.filter(F.size(toks) >= 10)
 
     keep_exact = (quality.groupBy(F.sha2("text", 256).alias("h"))

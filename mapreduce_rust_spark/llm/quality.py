@@ -24,7 +24,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.functions.text import WS_RE, whitespace_token_count
+from mapreduce_rust_spark.functions.text import (
+    WS_RE, whitespace_token_count, whitespace_tokens)
 from mapreduce_rust_spark.tables import load_table
 
 CONTAM_W = 5        # contamination n-gram width
@@ -33,10 +34,6 @@ PACK_LEN = 256      # token budget per packed sequence
 # per-language keep rates for the stratified sample (percent)
 SAMPLE_PCT = {"en": 50, "de": 100, "fr": 25, "es": 75}
 SAMPLE_DEFAULT_PCT = 100
-
-
-def _toks(col) -> F.Column:
-    return F.filter(F.split(col, WS_RE), lambda t: t != F.lit(""))
 
 
 def md5_bucket(col, mod: int) -> F.Column:
@@ -54,7 +51,7 @@ def quality_score_exprs() -> tuple[F.Column, F.Column]:
     quality score — shared by quality_classifier_score (keep/drop)
     and curriculum_phase_docs (phase ordering) so the two can never
     silently rank by different scores."""
-    toks = _toks(F.col("text"))
+    toks = whitespace_tokens("text")
     w_sum = F.aggregate(F.transform(toks, lambda t: md5_bucket(t, 2001) - 1000),
                         F.lit(0).cast("long"), lambda acc, x: acc + x)
     return F.size(toks).cast("long"), w_sum
@@ -106,7 +103,7 @@ def repetition_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     computes distinct count and the longest equal-run (= max
     multiplicity) in O(n) after the O(n log n) in-row sort."""
     docs = (load_table(spark, sf_dir, "documents")
-            .select("doc_id", _toks(F.col("text")).alias("toks")))
+            .select("doc_id", whitespace_tokens("text").alias("toks")))
     grams = F.array_sort(_grams(F.col("toks"), 2, False))
     n = F.size(grams)
     # run-length scan over the sorted array: state = (prev, run,
@@ -164,7 +161,7 @@ def gopher_rules_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     keep/drop verdict. (Thresholds adapted to the fixture's word-soup
     corpus; the rule SHAPES are the published ones.)"""
     docs = load_table(spark, sf_dir, "documents")
-    toks = _toks(F.col("text"))
+    toks = whitespace_tokens("text")
     n_tokens = F.size(toks).cast("long")
     sum_len = F.aggregate(toks, F.lit(0).cast("long"),
                           lambda acc, t: acc + F.length(t))
@@ -218,7 +215,7 @@ def contamination_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     never shuffled by the join. Docs with zero overlap are kept
     (left join) so the output is a full per-doc report."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = docs.select("doc_id", _toks(F.col("text")).alias("toks"))
+    toks = docs.select("doc_id", whitespace_tokens("text").alias("toks"))
     grams = toks.select(
         "doc_id",
         F.explode(_grams(F.col("toks"), CONTAM_W, True)).alias("g"))
@@ -305,7 +302,7 @@ def pack_sequences_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary packs exactly like ``sessionize_events_scalable``.
     Output: per (lang, pack_id) doc and token counts."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tokens = F.size(_toks(F.col("text"))).cast("long")
+    n_tokens = F.size(whitespace_tokens("text")).cast("long")
     d = docs.select("lang", "doc_id", n_tokens.alias("n_tokens"))
     w = W.partitionBy("lang").orderBy("doc_id")
     start = (F.sum("n_tokens").over(w) - F.col("n_tokens"))
@@ -656,7 +653,7 @@ def domain_upsample_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     factor = F.lit(1)
     for lang, k in UPSAMPLE_EPOCHS.items():
         factor = F.when(F.col("lang") == lang, F.lit(k)).otherwise(factor)
-    n_tokens = F.size(_toks(F.col("text"))).cast("long")
+    n_tokens = F.size(whitespace_tokens("text")).cast("long")
     d = docs.select("lang", n_tokens.alias("n_tokens"),
                     F.explode(F.sequence(F.lit(1), factor)).alias("epoch"))
     return (d.groupBy("lang", F.col("epoch").cast("long").alias("epoch"))
@@ -783,7 +780,7 @@ def dsir_importance_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     is_target = F.col("source").isin(*DSIR_TARGET_SOURCES)
     tok = (docs.select("doc_id", is_target.alias("is_target"),
-                       F.explode(_toks(F.col("text"))).alias("t"))
+                       F.explode(whitespace_tokens("text")).alias("t"))
                .withColumn("f", md5_bucket("t", DSIR_BUCKETS)))
     buckets = (tok.groupBy("f")
                .agg(F.sum(F.col("is_target").cast("long")).alias("c_t"),
@@ -953,7 +950,7 @@ def readability_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     multiplies, two subtractions left-to-right) written identically
     in the oracle; empty docs emit NULL on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    w = F.size(_toks(F.col("text"))).cast("long")
+    w = F.size(whitespace_tokens("text")).cast("long")
     s = F.regexp_count(F.col("text"), F.lit(r"[.!?]+")).cast("long")
     syl = F.regexp_count(F.col("text"), F.lit("[aeiouyAEIOUY]+")) \
            .cast("long")
@@ -1091,7 +1088,7 @@ def token_budget_epochs(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeats)``.
     """
     docs = load_table(spark, sf_dir, "documents")
-    per_src = (docs.select("source", F.size(_toks(F.col("text")))
+    per_src = (docs.select("source", F.size(whitespace_tokens("text"))
                            .cast("long").alias("nt"))
                .groupBy("source")
                .agg(F.sum("nt").alias("n_tokens")))
@@ -1192,7 +1189,8 @@ def dupfree_epoch_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     cl = (docs.select("source",
                       F.sha2(F.col("text"), 256).alias("sha"),
-                      F.size(_toks(F.col("text"))).cast("long").alias("nt"))
+                      F.size(whitespace_tokens("text")).cast("long")
+                       .alias("nt"))
           .groupBy("source", "sha")
           .agg(F.count("*").alias("k"), F.min("nt").alias("nt")))
     per_src = cl.groupBy("source").agg(

@@ -16,7 +16,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.llm.quality import _grams, _toks
+from mapreduce_rust_spark.functions.text import whitespace_tokens
+from mapreduce_rust_spark.llm.quality import _grams
 from mapreduce_rust_spark.tables import load_table
 
 DUP_W = 5  # n-gram width for the duplicated-n-gram profile
@@ -37,7 +38,7 @@ def dup_ngram_fraction_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     a hot gram contributes one count row, not k² pairs). Docs shorter
     than ``DUP_W`` tokens keep a row with fraction 0 (left join)."""
     docs = load_table(spark, sf_dir, "documents")
-    grams = (docs.select("doc_id", _toks(F.col("text")).alias("toks"))
+    grams = (docs.select("doc_id", whitespace_tokens("text").alias("toks"))
                  .select("doc_id",
                          F.explode(_grams(F.col("toks"), DUP_W, True))
                           .alias("g")))
@@ -244,7 +245,7 @@ def bucket_pad_stats_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     single scan at any corpus size. All integers until the final
     division of two exact longs."""
     docs = load_table(spark, sf_dir, "documents")
-    n_tok = F.size(_toks(F.col("text"))).cast("long")
+    n_tok = F.size(whitespace_tokens("text")).cast("long")
     bucket = F.lit(PAD_BUCKETS[-1])
     for b in reversed(PAD_BUCKETS):
         bucket = F.when(n_tok <= b, F.lit(b)).otherwise(bucket)
@@ -322,8 +323,7 @@ def shard_quality_cells(docs: DataFrame) -> DataFrame:
     key = F.md5(F.concat(F.col("text"), F.col("doc_id").cast("string")))
     shard = (F.conv(F.substring(key, 1, 12), 16, 10).cast("long")
              % N_SHARDS)
-    toks = F.filter(F.split(F.col("text"), r"\s+"),
-                    lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     return (docs.select(shard.alias("shard"), "source",
                         F.size(toks).cast("long").alias("nt"))
             .groupBy("shard", "source")

@@ -18,6 +18,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
+from mapreduce_rust_spark.functions.text import whitespace_tokens
 from mapreduce_rust_spark.functions.vector import cosine, dot, to_double, unit
 from mapreduce_rust_spark.tables import _local_rows, load_table
 
@@ -635,8 +636,7 @@ def cluster_keywords_embeddings(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-support-thinned."""
     docs = (load_table(spark, sf_dir, "documents")
             .select("doc_id",
-                    F.explode(F.filter(F.split("text", r"\s+"),
-                                       lambda t: t != F.lit("")))
+                    F.explode(whitespace_tokens("text"))
                      .alias("tok")))
     lab = (load_table(spark, sf_dir, "embeddings")
            .select(F.col("vec_id").alias("doc_id"), "label"))

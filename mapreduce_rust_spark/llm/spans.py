@@ -27,7 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
-from mapreduce_rust_spark.llm.quality import _grams, _toks
+from mapreduce_rust_spark.functions.text import whitespace_tokens
+from mapreduce_rust_spark.llm.quality import _grams
 from mapreduce_rust_spark.tables import load_table
 
 SPAN_W = 8       # tokens per window for duplicate-span detection
@@ -70,7 +71,7 @@ def dup_span_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 def dup_spans(docs: DataFrame, w: int = SPAN_W) -> DataFrame:
     """Core of :func:`dup_span_docs` over any ``(doc_id, text)``
     frame (see its docstring for semantics and scale shape)."""
-    wins = (docs.select("doc_id", _toks(F.col("text")).alias("toks"))
+    wins = (docs.select("doc_id", whitespace_tokens("text").alias("toks"))
                 .select("doc_id",
                         F.posexplode(_grams(F.col("toks"), w, False))
                          .alias("pos", "g"))
@@ -166,8 +167,8 @@ def chunk_stride(docs: DataFrame) -> DataFrame:
                  .alias("n_tokens")))
 
     chunks = F.element_at(
-        F.transform(F.array(_toks(F.col("text"))), per_row), 1)
-    return (docs.where(F.size(_toks(F.col("text"))) > 0)
+        F.transform(F.array(whitespace_tokens("text")), per_row), 1)
+    return (docs.where(F.size(whitespace_tokens("text")) > 0)
                 .select("doc_id", F.explode(chunks).alias("ch"))
                 .select("doc_id", "ch.chunk_id", "ch.chunk",
                         "ch.n_tokens"))

@@ -13,7 +13,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from mapreduce_rust_spark.functions.text import (
-    PUNCT_RE, WS_RE, fingerprint, normalized, whitespace_token_count)
+    PUNCT_RE, WS_RE, fingerprint, whitespace_token_count, whitespace_tokens)
 from mapreduce_rust_spark.tables import load_table
 
 # Tiny per-language stopword lists for the n-gram/stopword heuristic.
@@ -67,7 +67,7 @@ def quality_score_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_chars = F.length(txt).cast("double")
     n_punct = (F.length(txt) - F.length(F.regexp_replace(txt, PUNCT_RE, ""))) \
         .cast("double")
-    toks = F.filter(F.split(txt, WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens(txt)
     n_tokens = F.size(toks).cast("double")
     sw = F.array([F.lit(w) for w in STOPWORDS["en"]])
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(sw, t))).cast("double")
@@ -594,7 +594,7 @@ def boolean_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     serves many queries; for one ad-hoc conjunctive query, a scan
     touches each byte once and nothing moves between executors."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     terms = F.array(*[F.lit(t) for t in SEARCH_TERMS])
     matched = F.filter(toks, lambda t: F.array_contains(terms, t))
     return (docs.select("doc_id", "lang", "source",
@@ -641,7 +641,7 @@ def phrase_search_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: ``(doc_id, n_hits, first_pos)`` (1-based), hit docs only.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     posts = (docs.select("doc_id", F.posexplode(toks)
                          .alias("pos", "tok"))
                  .filter(F.col("tok").isin(*PHRASE_TERMS)))
@@ -706,7 +706,7 @@ def heaps_curve_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     Output: ``(doc_id, n_toks, new_types, cum_tokens, cum_vocab)``.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     per_doc = docs.select("doc_id", F.size(toks).cast("long")
                           .alias("n_toks"))
     first = (docs.select("doc_id", F.explode(toks).alias("tok"))
@@ -1066,7 +1066,7 @@ def ttr_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality_score_from convention); the ratio is int÷int double
     division, correctly rounded identically everywhere."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     d = docs.select("doc_id", toks.alias("toks"))
     n = F.size("toks").cast("long")
     nd = F.size(F.array_distinct("toks")).cast("long")
@@ -1111,7 +1111,7 @@ def bigram_lm_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     runs over ≤ |pairs of 20 prefixes| rows. cond_p is exact-int ÷
     exact-int."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     d = docs.select(toks.alias("toks"))
     nt = F.size("toks")
     idx = (F.when(nt >= 2, F.sequence(F.lit(1), nt - 1))
@@ -1182,7 +1182,7 @@ def collocations_pmi_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and the fixture scan is one task — spread first (functions.spread)
     from mapreduce_rust_spark.functions import spread
     docs = spread(load_table(spark, sf_dir, "documents"), "doc_id")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     d = docs.select(toks.alias("toks"))
     nt = F.size("toks")
     idx = (F.when(nt >= 2, F.sequence(F.lit(1), nt - 1))
@@ -1263,7 +1263,7 @@ def simpson_diversity_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate with map-side combine, re-aggregated to ≤ |sources|
     rows — the domain_keywords shuffle shape."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     st = (docs.select("source", F.explode(toks).alias("tok"))
               .groupBy("source", "tok").agg(F.count("*").alias("c")))
     per_src = st.groupBy("source").agg(
@@ -1308,7 +1308,7 @@ def source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     type), so there is no skew amplification; output is
     |sources|²/2 rows."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     vt = (docs.select("source", F.explode(toks).alias("tok")).distinct())
     sizes = vt.groupBy("source").agg(F.count("*").alias("v"))
     a, b = vt.alias("a"), vt.alias("b")
@@ -1364,7 +1364,7 @@ def kwic_snippets_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     join): zero shuffles, one codegen scan; the scan's filter is the
     array_position > 0 predicate."""
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     d = docs.select("doc_id", toks.alias("toks"))
     p = F.array_position("toks", KWIC_TERM)
     n = F.size("toks")
@@ -1431,7 +1431,7 @@ def bm25_scored(docs: DataFrame) -> DataFrame:
     term — the pre-top-k BM25 table, shared by ``bm25_search_docs``
     and the hybrid RRF fusion (``similarity.rrf_hybrid_search``).
     See ``bm25_search_docs`` for the float discipline."""
-    toks = F.filter(F.split("text", WS_RE), lambda t: t != F.lit(""))
+    toks = whitespace_tokens("text")
     base = docs.select("doc_id", toks.alias("toks"))
     lens = base.select("doc_id", F.size("toks").cast("long").alias("dl"))
     stats = lens.agg(F.count("*").cast("long").alias("n_docs"),
@@ -2252,7 +2252,7 @@ def hof_funcs_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     first_token_sorted, has_the)``.
     """
     docs = load_table(spark, sf_dir, "documents")
-    toks = F.filter(F.split("text", WS_RE), lambda x: x != "")
+    toks = whitespace_tokens("text")
     lens = F.transform(toks, lambda x: F.length(x).cast("long"))
     return docs.select(
         "doc_id",

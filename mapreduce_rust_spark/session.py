@@ -31,6 +31,15 @@ same code scales to a multi-executor cluster at ~100 TB:
   JVM's cold start. The first session on a machine builds the archive
   into the user's cache when its interpreter exits (about 30 s, once).
   A missing or rejected archive never fails a session.
+- DataFrame debugging (``spark.python.sql.dataFrameDebugging.enabled``)
+  is off. On, PySpark wraps every ``Column`` method and ``F.*`` call in
+  a call-site capture that costs four py4j round trips (the active
+  session, a conf read, a ``PySparkCurrentOrigin`` set and clear), and
+  its first call imports IPython into the driver (about 23 MB). Off,
+  building every registered query at sf0.01 sends 0.38x the round
+  trips (``plans/r25/py4j_round_trips.txt``). The cost: a DataFrame
+  error's context loses its Python call-site fragment; the JVM's query
+  context and the Python traceback remain.
 """
 
 from __future__ import annotations
@@ -121,6 +130,7 @@ def get_spark(app_name: str = "mapreduce_rust_spark",
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     creates = SparkContext._active_spark_context is None
     archive = cds.for_launch(builder) if creates else None

@@ -2,21 +2,27 @@
 a task's ``importlib.invalidate_caches()`` re-reads a zip archive's
 directory only when the archive changed, one daemon, with pandas and
 pyarrow imported, serves RDD and Arrow tasks alike, and a ``get_spark``
-call that creates the context boots that daemon on its own."""
+call that creates the context boots that daemon on its own. Also the
+driver's py4j traffic: no call-site capture around ``Column`` ops, and
+a bloom bitmap that enters a plan as one literal."""
 
 from __future__ import annotations
 
+import contextlib
+import importlib.util
 import json
 import os
 import subprocess
 import sys
 import textwrap
+import threading
 import zipfile
 import zipimport
 from pathlib import Path
 
 import pandas as pd
 import pytest
+from py4j.clientserver import ClientServerConnection
 from pyspark.sql import SparkSession
 
 from mapreduce_rust_spark.core.pyworker import invalidate_caches
@@ -112,6 +118,80 @@ def test_logger_demotion_failure_warns_and_keeps_the_session(spark, monkeypatch)
     monkeypatch.setattr(spark.sparkContext, "_jvm", _Gone())
     with pytest.warns(RuntimeWarning, match="gateway gone"):
         assert get_spark() is spark
+
+
+@contextlib.contextmanager
+def _main_thread_commands():
+    """The py4j commands the main thread sends while the block runs,
+    one per round trip to the JVM."""
+    sent = []
+    send = ClientServerConnection.send_command
+    main = threading.main_thread()
+
+    def counted(self, command):
+        if threading.current_thread() is main:
+            sent.append(command)
+        return send(self, command)
+
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(ClientServerConnection, "send_command", counted)
+        yield sent
+
+
+def test_column_ops_send_no_call_site_capture(spark, monkeypatch):
+    """``get_spark`` turns DataFrame debugging off, so a ``Column``
+    method sends no ``PySparkCurrentOrigin`` set and clear around its
+    own call. PySpark caches the setting per process at its first
+    ``Column`` call; the test drops that cache so this session's conf
+    decides."""
+    from pyspark.errors import utils
+    from pyspark.sql import functions as F
+
+    monkeypatch.setattr(utils, "_enable_debugging_cache", None)
+    with _main_thread_commands() as sent:
+        F.col("id").alias("x")
+    assert sent, "the Column ops sent no command at all"
+    assert not [c for c in sent if "PySparkCurrentOrigin" in c], sent
+
+
+_IPYTHON_PROBE = textwrap.dedent("""
+    import sys
+    from pyspark.sql import functions as F
+    from mapreduce_rust_spark.session import get_spark
+
+    spark = get_spark("ipython-probe")
+    spark.range(2).select(F.col("id").alias("x")).collect()
+    print("IPython" in sys.modules, flush=True)
+    spark.stop()
+""")
+
+
+@pytest.mark.skipif(importlib.util.find_spec("IPython") is None,
+                    reason="IPython is not installed")
+def test_get_spark_keeps_ipython_out_of_the_driver():
+    """With DataFrame debugging on, PySpark's call-site capture imports
+    IPython (about 23 MB) into the driver on its first call."""
+    probe = _probe(_IPYTHON_PROBE)
+    out, err = probe.communicate(timeout=300)
+    assert probe.returncode == 0, err[-3000:]
+    assert out.strip() == "False", out
+
+
+@pytest.mark.parametrize("scale", [1, 8])
+def test_bloom_prefilter_plan_costs_bounded_round_trips(spark, monkeypatch,
+                                                        scale):
+    """The bitmap goes into the plan as one SQL literal, so building
+    the prefilter costs the same few round trips at any ``BLOOM_M``
+    (``F.lit(list)`` pays about four per bitmap word)."""
+    from mapreduce_rust_spark.operators import bloom
+
+    monkeypatch.setattr(bloom, "BLOOM_M", bloom.BLOOM_M * scale)
+    bitmap = [-1] * (bloom.BLOOM_M // 64)
+    probe = spark.range(8).withColumnRenamed("id", "k")
+    with _main_thread_commands() as sent:
+        pre = bloom.bloom_prefilter(probe, "k", bitmap)
+    assert len(sent) <= 300, len(sent)
+    assert pre.count() == 8  # an all-ones bitmap passes every key
 
 
 def test_python_tasks_share_one_preloaded_daemon(spark):
